@@ -42,6 +42,7 @@ from neural_search_spark.index.build import (
 )
 from neural_search_spark.index.codec import CODEC_VERSION
 from neural_search_spark.index.segments import build_segments, shard_col
+from neural_search_spark.session import local_frame
 
 STAGES = ["docs", "postings", "doclens", "term_stats", "segments"]
 
@@ -110,12 +111,16 @@ class IndexStore:
         with open(os.path.join(path, "meta.json")) as f:
             self.meta = json.load(f)
         self._plan_cache: dict | None = None
+        self._handles: dict[str, DataFrame] = {}
+        self._handles_epoch: tuple | None = None
 
     def _epoch(self) -> tuple:
-        """Cheap invalidation key for session caches: (name, mtime, size)
-        of every stage manifest, tombstone file, and meta.json — anything
-        that changes the index (build stage rewrite, delete, compact,
-        streaming append) touches at least one of these."""
+        """Cheap invalidation key for the plan cache and the parquet
+        handles: (name, mtime_ns, size) of every file in `_manifests/` and
+        `tombstones/`, plus meta.json. A build stage rewrite, delete_docs and
+        compact() each touch at least one of these. A StreamingIndexer
+        append writes its own directory (`runs/`, `_state.json`), which is
+        not statted: it does not change this store's tables."""
         entries = []
         for sub in ("_manifests", "tombstones"):
             d = os.path.join(self.path, sub)
@@ -192,25 +197,45 @@ class IndexStore:
         return self._plan_cache
 
     # --- open-time accessors (lazy scans; segments scan prunes by shard) --
+    def _table(self, stage: str) -> DataFrame:
+        """The parquet handle of `stage`, opened once per _epoch().
+        `spark.read.parquet` runs a 1-task schema-inference job and lists
+        the stage's files; a handle keeps both, so it is only valid while
+        the files it listed exist — compact() drops the handles on every
+        stage swap, before the epoch moves."""
+        epoch = self._epoch()
+        if epoch != self._handles_epoch:
+            self._handles, self._handles_epoch = {}, epoch
+        h = self._handles.get(stage)
+        if h is None:
+            h = self._handles[stage] = self.spark.read.parquet(os.path.join(self.path, stage))
+        return h
+
     @property
     def docs(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "docs"))
+        return self._table("docs")
 
     @property
     def postings(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "postings"))
+        return self._table("postings")
 
     @property
     def doclens(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "doclens"))
+        return self._table("doclens")
 
     @property
     def term_stats(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "term_stats"))
+        return self._table("term_stats")
 
     @property
     def segments(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "segments"))
+        return self._table("segments")
+
+    def _meta_frame(self) -> DataFrame:
+        """One-row (N, avgdl) frame of meta.json, read without a Spark job."""
+        return local_frame(
+            self.spark, [(self.meta["N"], self.meta["avgdl"])], "N long, avgdl double"
+        )
 
     # --- deletes: Lucene liveDocs semantics -------------------------------
     # deleted docs are tombstoned, excluded from results immediately, but
@@ -231,7 +256,7 @@ class IndexStore:
             f.endswith(".parquet") for f in os.listdir(p)
         ):
             return None
-        return self.spark.read.parquet(p).select("docID").distinct()
+        return self._table("tombstones").select("docID").distinct()
 
     def delete_docs(self, doc_ids) -> int:
         """Tombstone docs by id list or (docID) DataFrame; idempotent
@@ -240,9 +265,7 @@ class IndexStore:
         if isinstance(doc_ids, DataFrame):
             ids = doc_ids.select(F.col(doc_ids.columns[0]).cast("long").alias("docID"))
         else:
-            ids = self.spark.createDataFrame(
-                [(int(d),) for d in doc_ids], "docID long"
-            )
+            ids = local_frame(self.spark, [(int(d),) for d in doc_ids], "docID long")
         # count only genuinely-live deletions (bounded: one aggregate job)
         prev = self.tombstones
         new = ids.distinct()
@@ -285,6 +308,9 @@ class IndexStore:
             else:
                 df.write.mode("overwrite").parquet(tmp)
             old = os.path.join(self.path, stage)
+            # the epoch moves only once meta.json is rewritten: drop the
+            # handles now, or the next read opens the swapped-out files
+            self._handles.clear()
             shutil.rmtree(old, ignore_errors=True)
             os.replace(tmp, old)
 
@@ -360,11 +386,8 @@ class IndexStore:
             # liveDocs semantics) until compact() clears the tombstones
             from neural_search_spark.query.bm25 import bm25_score_all, topk as _topk
 
-            meta = self.spark.createDataFrame(
-                [(self.meta["N"], self.meta["avgdl"])], "N long, avgdl double"
-            )
             scored = bm25_score_all(
-                self.postings, self.doclens, self.term_stats, meta, terms,
+                self.postings, self.doclens, self.term_stats, self._meta_frame(), terms,
                 exclude=tombs,
             )
             return _topk(scored, k)
@@ -414,10 +437,9 @@ class IndexStore:
         if strategy == "relational":
             from neural_search_spark.query.bm25 import bm25_topk
 
-            meta = self.spark.createDataFrame(
-                [(self.meta["N"], self.meta["avgdl"])], "N long, avgdl double"
+            return bm25_topk(
+                self.postings, self.doclens, self.term_stats, self._meta_frame(), terms, k=k
             )
-            return bm25_topk(self.postings, self.doclens, self.term_stats, meta, terms, k=k)
         return wand_topk(
             self.segments,
             self.term_stats,
@@ -442,12 +464,9 @@ class IndexStore:
         from neural_search_spark.index.build import IndexTables
         from neural_search_spark.query.dsl import QueryEngine
 
-        meta = self.spark.createDataFrame(
-            [(self.meta["N"], self.meta["avgdl"])], "N long, avgdl double"
-        )
         tables = IndexTables(
             postings=self.postings, doclens=self.doclens,
-            term_stats=self.term_stats, meta=meta,
+            term_stats=self.term_stats, meta=self._meta_frame(),
         )
         pos = None
         if positional:
@@ -490,10 +509,27 @@ class IndexStore:
         }
 
     def fetch(self, topk: DataFrame) -> DataFrame:
-        """Join top-k hits back to the source turns (fetch phase — reference
-        NormalizationProcessorWorkflow.java:180-229); the k-row side is
-        broadcast, never the corpus."""
-        return self.docs.join(F.broadcast(topk), "docID").orderBy("rank")
+        """Top-k hits with their source turns (fetch phase — reference
+        NormalizationProcessorWorkflow.java:180-229): (docID, the other docs
+        columns, the other top-k columns), in rank order.
+
+        Collects the ≤k hit rows, then reads `docs` with their docIDs pushed
+        into the parquet scan as an IN-list — docIDs are assigned in
+        contiguous per-partition ranges, so row-group min/max stats skip
+        the row groups that hold no hit — and adds rank and score as
+        literal docID-keyed map columns. That is one Spark job for the fetch and no
+        join or global sort. The k rows come back as an Arrow-backed local
+        relation sorted by rank, so reading the result fires no job."""
+        hits = {int(r["docID"]): r for r in topk.collect()}
+        docs = self.docs
+        cols = [F.col("docID")] + [F.col(c) for c in docs.columns if c != "docID"]
+        for f in topk.schema.fields:
+            if f.name != "docID":
+                pairs = [x for d, r in hits.items() for x in (F.lit(d), F.lit(r[f.name]))]
+                value = F.create_map(*pairs)[F.col("docID")] if pairs else F.lit(None)
+                cols.append(value.cast(f.dataType).alias(f.name))
+        found = docs.where(F.col("docID").isin(sorted(hits))).select(*cols)
+        return self.spark.createDataFrame(found.toArrow().sort_by("rank"), schema=found.schema)
 
     # --- snapshot / restore (the _snapshot API analog) --------------------
 
@@ -542,7 +578,7 @@ class IndexStore:
                     rel in prior_md5
                     and os.path.exists(dst)
                     and os.path.getsize(dst) == size
-                    and abs(os.stat(dst).st_mtime - st.st_mtime) < 1e-6
+                    and os.stat(dst).st_mtime_ns == st.st_mtime_ns
                 ):
                     skipped += 1
                     digest = prior_md5[rel]

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from neural_search_spark import B, K1
+from neural_search_spark.session import local_frame
 
 
 def idf_col(df_col, n_col) -> F.Column:
@@ -44,7 +45,8 @@ def query_terms_df(
     terms: dict[str, float] | list[str],
     clause_counts: dict[str, int] | None = None,
 ) -> DataFrame:
-    """Literal query terms → 1-row-per-term DataFrame (broadcastable).
+    """Literal query terms → 1-row-per-term DataFrame (broadcastable; an
+    Arrow-backed local relation, see session.local_frame).
 
     `clause_counts` records how many SHOULD clauses each distinct term
     stands for (a duplicated query term is multiple Lucene clauses); used
@@ -55,7 +57,7 @@ def query_terms_df(
         rows = [(t, float(terms[t]), int(counts.get(t, 1))) for t in sorted(terms)]
     else:
         rows = [(t, 1.0, int(counts.get(t, 1))) for t in sorted(set(terms))]
-    return spark.createDataFrame(rows, "q_term string, q_weight double, q_clauses int")
+    return local_frame(spark, rows, "q_term string, q_weight double, q_clauses int")
 
 
 def bm25_score_all(

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from neural_search_spark import B, K1
 from neural_search_spark.query.bm25 import bm25_score_col, idf_col
+from neural_search_spark.session import local_frame
 
 MAX_BOOL_CLAUSES = 63  # single int64 bitmask; Lucene's own cap is 1024
 
@@ -95,12 +96,12 @@ def fused_bool_scores(
             if role == "scoring":
                 weight[t] = weight.get(t, 0.0) + float(wt)
             mask[t] = mask.get(t, 0) | (1 << i)
-    if not mask:
-        return postings.sparkSession.createDataFrame([], "docID long, score double")
-
     spark = postings.sparkSession
+    if not mask:
+        return local_frame(spark, [], "docID long, score double")
+
     qrows = [(t, weight.get(t, 0.0), mask[t]) for t in sorted(mask)]
-    q = spark.createDataFrame(qrows, "q_term string, q_weight double, q_mask long")
+    q = local_frame(spark, qrows, "q_term string, q_weight double, q_mask long")
 
     m = meta.first()
     n_docs, avgdl = m["N"], float(m["avgdl"])

@@ -108,6 +108,7 @@ from neural_search_spark.query.sparse import (
     MAX_WINDOW_SIZE,
     PRUNE_RATIO,
 )
+from neural_search_spark.session import local_frame
 
 MAX_SUBQUERIES = 5
 
@@ -1396,8 +1397,8 @@ class QueryEngine:
                 for qid, weights in enumerate(parsed)
                 for t, w in sorted(weights.items())
             ]
-            qdf = self.docs.sparkSession.createDataFrame(
-                rows, "query_id long, term string, weight double"
+            qdf = local_frame(
+                self.docs.sparkSession, rows, "query_id long, term string, weight double"
             )
             return bm25_topk_batch(
                 self.tables.postings, self.tables.doclens, self.tables.term_stats,
@@ -1932,6 +1933,12 @@ class QueryEngine:
                 # float32 — coarser than 6dp — so this is closer to
                 # reference behavior than double-ULP ordering).
                 dec = body.get("score_decimals")
+                if dec is not None and (
+                    isinstance(dec, bool) or not isinstance(dec, int) or dec < 0
+                ):
+                    raise QueryValidationError(
+                        f"top_hits score_decimals must be a non-negative integer, got {dec!r}"
+                    )
                 scored_all = self._score(query, None, k=k)
                 meta_cols = self.docs.select(
                     F.col(self.id_col).alias("docID"), F.col(group_by).alias("key")
@@ -1940,7 +1947,7 @@ class QueryEngine:
                 from pyspark.sql import Window as _W
 
                 rank_score = (
-                    F.round(F.col("score"), int(dec)) if dec is not None else F.col("score")
+                    F.round(F.col("score"), dec) if dec is not None else F.col("score")
                 )
                 w = _W.partitionBy("key").orderBy(
                     rank_score.desc(), F.col("docID").asc()

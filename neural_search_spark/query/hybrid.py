@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from neural_search_spark import B, K1
 from neural_search_spark.index.build import IndexTables
 from neural_search_spark.query.bm25 import bm25_score_col, idf_col
+from neural_search_spark.session import local_frame
 
 MIN_SCORE = 0.001  # MinMaxScoreNormalizationTechnique.java:26
 MAX_SUBQUERIES = 5  # HybridQueryBuilder.java:56
@@ -130,7 +131,7 @@ def fused_bm25_subquery_parts(
             sorted(terms.items()) if isinstance(terms, dict) else [(t, 1.0) for t in sorted(set(terms))]
         )
         rows.extend((idx, t, float(w)) for t, w in pairs)
-    q = spark.createDataFrame(rows, "subquery_idx int, q_term string, q_weight double")
+    q = local_frame(spark, rows, "subquery_idx int, q_term string, q_weight double")
     scored_terms = q.join(index.term_stats, q.q_term == index.term_stats.term).select(
         "subquery_idx",
         "term",

@@ -63,6 +63,7 @@ from pyspark.sql import types as T
 
 from neural_search_spark import B, K1
 from neural_search_spark.index.codec import decode_blocks_batch
+from neural_search_spark.session import local_frame
 
 _DECODED_SCHEMA = T.StructType(
     [
@@ -184,55 +185,84 @@ def wand_topk(
         scan_filter = scan_filter & F.col("shard").isin(shard_vals)
     segments = segments.where(scan_filter)
 
-    # only the metadata columns are persisted — the compressed payloads are
-    # re-read lazily by whichever decode actually runs
     meta_cols = ["term", "salt", "blockID", "first_docID", "last_docID", "n", "max_score_component"]
-    qmeta = segments.select(*meta_cols).persist()
-    try:
-        zlo_c = (F.col("first_docID") / zone_width).cast("long")
-        zhi_c = (F.col("last_docID") / zone_width).cast("long")
-        wide_c = (zhi_c - zlo_c) >= wide_cap
-        _t0 = _time.time()
-        cache_ok = (
-            plan_cache is not None
-            and plan_cache.get("zone_width") == zone_width
-            and plan_cache.get("wide_cap") == wide_cap
-        )
-        if cache_ok:
-            # job A skipped: the session-level per-term aggregate already
-            # holds df/nblocks/nwide/wide_max/tmax for every term of the
-            # index epoch. Terms absent from the cache have no postings.
-            ct = plan_cache["terms"]
-            agg_rows = [dict(ct[t], term=t) for t in q_terms if t in ct]
-        else:
-            # job A: df per term (exact: each posting sits in exactly one
-            # block of its term), block counts, and the wide-block max
-            # score component — ONE collect replaces the old df-lookup
-            # scan, blocks_total count, and gmax collect
-            agg_rows = (
-                qmeta.groupBy("term")
-                .agg(
-                    F.sum("n").alias("df"),
-                    F.count("*").alias("nblocks"),
-                    F.count(F.when(wide_c, F.lit(1))).alias("nwide"),
-                    F.max(F.when(wide_c, F.col("max_score_component"))).alias("wide_max"),
-                    F.max("max_score_component").alias("tmax"),
-                )
-                .collect()
+    qmeta = segments.select(*meta_cols)
+    zlo_c = (F.col("first_docID") / zone_width).cast("long")
+    zhi_c = (F.col("last_docID") / zone_width).cast("long")
+    wide_c = (zhi_c - zlo_c) >= wide_cap
+    _t0 = _time.time()
+    cache_ok = (
+        plan_cache is not None
+        and plan_cache.get("zone_width") == zone_width
+        and plan_cache.get("wide_cap") == wide_cap
+    )
+    if cache_ok:
+        # job A skipped: the session-level per-term aggregate already
+        # holds df/nblocks/nwide/wide_max/tmax for every term of the
+        # index epoch. Terms absent from the cache have no postings.
+        ct = plan_cache["terms"]
+        agg_rows = [dict(ct[t], term=t) for t in q_terms if t in ct]
+    else:
+        # job A: df per term (exact: each posting sits in exactly one
+        # block of its term), block counts, and the wide-block max
+        # score component — ONE collect replaces the old df-lookup
+        # scan, blocks_total count, and gmax collect
+        agg_rows = (
+            qmeta.groupBy("term")
+            .agg(
+                F.sum("n").alias("df"),
+                F.count("*").alias("nblocks"),
+                F.count(F.when(wide_c, F.lit(1))).alias("nwide"),
+                F.max(F.when(wide_c, F.col("max_score_component"))).alias("wide_max"),
+                F.max("max_score_component").alias("tmax"),
             )
-        phases["plan_agg"] = round(_time.time() - _t0, 3)
+            .collect()
+        )
+    phases["plan_agg"] = round(_time.time() - _t0, 3)
+    if stats_out is not None:
+        stats_out["plan_cache_hit"] = bool(cache_ok)
+    dfs = {r["term"]: int(r["df"]) for r in agg_rows}
+    w_idf = {
+        t: terms[t] * math.log(1.0 + (n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5))
+        for t in q_terms
+        if t in dfs
+    }
+    if not w_idf:
+        return local_frame(spark, [], "rank long, docID long, score double")
+    n_total = sum(int(r["nblocks"]) for r in agg_rows)
+    n_wide = sum(int(r["nwide"]) for r in agg_rows)
+
+    if not prune or n_total <= no_prune_blocks:
+        # w_idf rides as a literal term-keyed map: no broadcast join, so the
+        # decode and the partial aggregate run in the same job
+        widf_map = F.create_map(*[x for t in sorted(w_idf) for x in (F.lit(t), F.lit(w_idf[t]))])
+        scored = _decode_and_score(
+            segments.where(F.col("term").isin(sorted(w_idf))).select(
+                "term", widf_map[F.col("term")].alias("w_idf"), "n", "docids", "tfs", "dls"
+            ),
+            avgdl, k1, b,
+        )
         if stats_out is not None:
-            stats_out["plan_cache_hit"] = bool(cache_ok)
-        dfs = {r["term"]: int(r["df"]) for r in agg_rows}
-        w_idf = {
-            t: terms[t] * math.log(1.0 + (n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5))
-            for t in q_terms
-            if t in dfs
-        }
-        if not w_idf:
-            return spark.createDataFrame([], "rank long, docID long, score double")
-        n_total = sum(int(r["nblocks"]) for r in agg_rows)
-        n_wide = sum(int(r["nwide"]) for r in agg_rows)
+            stats_out.update(
+                {
+                    "theta": 0.0,
+                    "blocks_total": n_total,
+                    "blocks_surviving": n_total,
+                    "blocks_wide": n_wide,
+                    "zones_total": 0,
+                    "zones_surviving": 0,
+                    "blocks_rescued": 0,
+                    "rescue_candidates": 0,
+                    "pruning_skipped": True,
+                }
+            )
+        return _ranked(scored.groupBy("docID").agg(F.sum("part").alias("score")), k)
+
+    # the prune path reads the block metadata several times: persist only
+    # its columns — the compressed payloads are re-read lazily by whichever
+    # decode actually runs
+    qmeta = qmeta.persist()
+    try:
         gmax = {
             r["term"]: w_idf[r["term"]] * float(r["wide_max"])
             for r in agg_rows
@@ -244,33 +274,12 @@ def wand_topk(
         ub = {r["term"]: w_idf[r["term"]] * float(r["tmax"]) for r in agg_rows if r["term"] in w_idf}
 
         widf_df = F.broadcast(
-            spark.createDataFrame(
-                [(t, w) for t, w in sorted(w_idf.items())], "term string, w_idf double"
-            )
+            local_frame(spark, sorted(w_idf.items()), "term string, w_idf double")
         )
         qblocks = segments.join(widf_df, "term").withColumn(
             "ub", F.col("w_idf") * F.col("max_score_component")
         )
 
-        if not prune or n_total <= no_prune_blocks:
-            scored = _decode_and_score(
-                qblocks.select("term", "w_idf", "n", "docids", "tfs", "dls"), avgdl, k1, b
-            )
-            if stats_out is not None:
-                stats_out.update(
-                    {
-                        "theta": 0.0,
-                        "blocks_total": n_total,
-                        "blocks_surviving": n_total,
-                        "blocks_wide": n_wide,
-                        "zones_total": 0,
-                        "zones_surviving": 0,
-                        "blocks_rescued": 0,
-                        "rescue_candidates": 0,
-                        "pruning_skipped": True,
-                    }
-                )
-            return _ranked(scored.groupBy("docID").agg(F.sum("part").alias("score")), k)
         # seed θ from the `seed_blocks` highest-ub blocks of each term: the
         # k-th best score among their docs lower-bounds the true k-th best,
         # and decoding S·q blocks (~S·q·block_size postings) is noise next
@@ -344,9 +353,7 @@ def wand_topk(
         narrow = cls_e.where(~F.col("_wide"))
         g_const_e = sum(v for t, v in gmax.items() if t not in ne_set)
         gmax_df = F.broadcast(
-            spark.createDataFrame(
-                [(t, gmax.get(t, 0.0)) for t in e_terms], "term string, gmx double"
-            )
+            local_frame(spark, [(t, gmax.get(t, 0.0)) for t in e_terms], "term string, gmx double")
         )
         zstats = (
             narrow.select("term", F.explode(F.sequence("_zlo", "_zhi")).alias("zone"), "ub")
@@ -519,7 +526,7 @@ def wand_topk(
                     "rescue_candidates": 0,
                 }
             )
-        return spark.createDataFrame(rows, "rank int, docID long, score double")
+        return local_frame(spark, rows, "rank int, docID long, score double")
     finally:
         qmeta.unpersist()
 

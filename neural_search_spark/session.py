@@ -8,7 +8,19 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+
+def _default_driver_mem() -> str:
+    """48g, capped at 60% of physical memory (never below the -Xms4g floor).
+    G1 grows the heap toward its max before collecting hard, so a max
+    above physical memory lets a long session's JVM outgrow the host: the
+    pytest JVM on a 16 GB host reached 15 GB RSS and was OOM-killed."""
+    try:
+        total_mb = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")) >> 20
+    except (AttributeError, OSError, ValueError):
+        return "48g"
+    return f"{max(4096, min(48 * 1024, int(total_mb * 0.6)))}m"
 
 
 def get_spark(
@@ -49,7 +61,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # force the sort-based shuffle writer: the bypass-merge writer opens
@@ -127,3 +139,29 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A small frame built in Python on the query path (query terms,
+    N/avgdl, top-k hits, an id list) as an Arrow-backed local relation.
+    `schema` is a DDL string.
+
+    `spark.createDataFrame(list)` is an RDD of pickled rows: a one-row
+    `.first()` on it fires 2 Spark jobs, and a broadcast of it ships it
+    through the executors. An Arrow table below the local-relation
+    threshold plans as a LocalTableScan that Spark reads in-process —
+    `.first()` fires no job — with the column types fixed by `schema`,
+    not inferred."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    struct = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    rows = list(rows)
+    cols = list(zip(*rows)) if rows else [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=struct)

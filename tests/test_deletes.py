@@ -77,6 +77,19 @@ def test_compact_refreshes_stats_and_clears_tombstones(spark, tmp_path):
     assert [d for d, _ in rel] == [d for d, _ in seg]
     for (_, a), (_, b) in zip(rel, seg):
         assert abs(a - b) < 1e-9
+    # the same store object reads the swapped stages, not handles opened on
+    # the swapped-out files: fetch and the DSL answer from the compacted index
+    fetched = store.fetch(store.topk(QUERY, k=5)).collect()
+    assert [(f["rank"], f["docID"]) for f in fetched] == [
+        (i + 1, d) for i, (d, _) in enumerate(seg)
+    ]
+    for f, (_, score) in zip(fetched, seg):
+        assert abs(f["score"] - score) < 1e-9 and f["text"]
+    assert not {f["docID"] for f in fetched} & set(victims)
+    dsl = store.query_engine().search({"match": {"text": " ".join(QUERY)}}, k=5).collect()
+    assert [r["docID"] for r in dsl] == [d for d, _ in rel]
+    for r, (_, score) in zip(dsl, rel):
+        assert abs(r["score"] - score) < 1e-9
     # compacting with nothing deleted is a no-op
     res2 = store.compact()
     assert res2["deleted"] == 0 and res2["N"] == n0 - 4

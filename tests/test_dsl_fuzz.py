@@ -71,3 +71,14 @@ def test_dsl_never_leaks_raw_errors(fuzz_engine):
     # a soft budget: malformed input should overwhelmingly map to the
     # validation error; raw leaks indicate missing parse guards
     assert not leaks, leaks[:5]
+
+
+def test_top_hits_score_decimals_validated(fuzz_engine):
+    q = {"match": {"text": "alpha"}}
+    for dec in (-1, 1.5, "2", True):
+        aggs = {"t": {"top_hits": {"group_by": "text", "score_decimals": dec}}}
+        with pytest.raises(QueryValidationError, match="score_decimals"):
+            fuzz_engine.search_with_aggs(q, aggs)
+    aggs = {"t": {"top_hits": {"group_by": "text", "score_decimals": 2}}}
+    _, out = fuzz_engine.search_with_aggs(q, aggs)
+    assert out["t"].count() == 8

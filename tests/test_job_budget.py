@@ -1,0 +1,62 @@
+"""Spark job budget per public read op.
+
+At interactive scale a read's latency is its job count, not its work: each
+job pays scheduling, and with AQE each shuffle stage is a job of its own.
+This test warms each op once (plan cache, parquet handles, Python workers)
+and then counts the jobs of one more call through a job group, so a change
+that adds a job to a warm read fails here, not only in a benchmark."""
+
+from __future__ import annotations
+
+import pytest
+
+from neural_search_spark.data import synthesize_transcripts
+from neural_search_spark.index.store import IndexStore, build_index
+
+QUERY = ["the", "data", "spark"]
+
+
+def match(text: str) -> dict:
+    return {"match": {"text": {"query": text}}}
+
+
+#: op → (call, job budget)
+OPS = {
+    "topk+fetch": (lambda store, eng: store.fetch(store.topk(QUERY, k=5)).collect(), 3),
+    "match": (lambda store, eng: eng.search(match("data spark"), k=5).collect(), 4),
+    "bool": (lambda store, eng: eng.search({"bool": {
+        "must": [match("data")], "should": [match("spark query")],
+        "must_not": [match("index")], "filter": [{"eq": ["role", "user"]}]}}, k=5).collect(), 5),
+    "hybrid": (lambda store, eng: eng.search({"hybrid": {
+        "queries": [match("the data"), match("spark")],
+        "normalization": "min_max", "combination": "arithmetic_mean"}}, k=5).collect(), 7),
+    "msearch": (lambda store, eng: eng.msearch(
+        [match("data"), match("spark query"), match("the index")], k=5).collect(), 8),
+}
+
+
+@pytest.fixture(scope="module")
+def store(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("budget") / "idx")
+    tr = synthesize_transcripts(spark, n_convs=12, turns_per_conv=6, seed=5)
+    build_index(spark, tr, path, source_fingerprint="synth:12x6:5", postings_per_salt=50)
+    return IndexStore(spark, path)
+
+
+def count_jobs(spark, group: str, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "job budget")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("op", list(OPS))
+def test_warm_read_job_budget(spark, store, op):
+    call, budget = OPS[op]
+    engine = store.query_engine()
+    call(store, engine)  # warm: plan cache, parquet handles, Python workers
+    jobs = count_jobs(spark, f"job-budget-{op}", lambda: call(store, engine))
+    assert jobs <= budget, f"{op}: {jobs} Spark jobs, budget {budget}"

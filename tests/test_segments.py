@@ -386,3 +386,25 @@ def test_store_snapshot_and_restore(spark, tmp_path):
     with pytest.raises(ValueError, match="incomplete"):
         IndexStore.restore(spark, sdir, str(tmp_path / "idx_restored2"))
     assert not _os.path.exists(str(tmp_path / "idx_restored2"))
+
+
+def test_snapshot_copies_same_size_rewrite(spark, tmp_path):
+    """A file rewritten in place with the same size and a new mtime_ns is
+    copied again: the skip check compares st_mtime_ns exactly."""
+    import json as _json
+    import os as _os
+
+    src = tmp_path / "idx"
+    (src / "docs").mkdir(parents=True)
+    (src / "meta.json").write_text(_json.dumps({"N": 1, "avgdl": 1.0}))
+    part = src / "docs" / "part-0.parquet"
+    part.write_bytes(b"aaaa")
+    store = IndexStore(spark, str(src))
+    m1 = store.snapshot(str(tmp_path / "snaps"), name="s")
+    assert m1["copied"] == 2
+    mtime_ns = _os.stat(part).st_mtime_ns
+    part.write_bytes(b"bbbb")
+    _os.utime(part, ns=(mtime_ns, mtime_ns + 500))  # 0.5 µs later: a float compare misses it
+    m2 = store.snapshot(str(tmp_path / "snaps"), name="s")
+    assert (m2["copied"], m2["skipped"]) == (1, 1)
+    assert (tmp_path / "snaps" / "s" / "docs" / "part-0.parquet").read_bytes() == b"bbbb"
