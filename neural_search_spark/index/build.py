@@ -35,7 +35,7 @@ from neural_search_spark.analysis.tokenizer import tokenize_col
 
 @dataclass
 class IndexTables:
-    postings: DataFrame  # term, docID, tf
+    postings: DataFrame  # term, docID, tf[, dl] (without dl, scorers join doclens)
     doclens: DataFrame  # docID, dl
     term_stats: DataFrame  # term, df
     meta: DataFrame  # N, avgdl

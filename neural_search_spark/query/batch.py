@@ -10,14 +10,11 @@ eval sets, hard-negative mining for retrieval training, and bulk
 re-scoring all present as "10³–10⁶ queries × 10¹²-doc index", where
 per-query execution would re-scan the postings once per query.
 
-Plan shape (one scan, two shuffles, both keyed on data that fans OUT
-rather than replicates the corpus):
-  queries(query_id, term, weight) ⋈ term_stats        -> w_idf per (q, t)
-  postings ⋈ matched-terms (broadcast when small,
-             shuffle-hash on `term` when the query set is huge)
-  groupBy (query_id, docID) sum                       -> exact scores
-  two-level per-query top-k (bounded heaps per partition, then
-             coordinator-scale final rank — never a global sort)
+Plan shape: bm25_score_batch and fused_subquery_scores_batch are the
+bm25.bm25_parts kernel (one postings scan, the batch's terms pushed down
+as an IN-list while they fit) summed per (query_id[, subquery_idx],
+docID), then a two-level per-query top-k (bounded heaps per partition,
+then coordinator-scale final rank — never a global sort).
 
 Scoring is identical to query/bm25.py (Lucene BM25Similarity defaults,
 k1 = 1.2, b = 0.75, tie-break score desc / docID asc —
@@ -29,28 +26,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from neural_search_spark import B, K1
-from neural_search_spark.query.bm25 import bm25_score_col, idf_col
-
-# below this many distinct query terms, the term list is collected to the
-# driver and pushed into the parquet scan as an IN-list (row-group skipping);
-# above it the scan is a full pass — correct for huge query batches, where
-# the batch's vocabulary approaches the corpus vocabulary anyway
-MAX_INLIST_TERMS = 10_000
+from neural_search_spark.query.bm25 import _inlist_pruned, bm25_parts
 
 
 def per_query_topk(
-    scores: DataFrame, k: int, key: str | list[str] = "query_id"
+    scores: DataFrame, k: int, key: str | list[str] = "query_id", order: list | None = None
 ) -> DataFrame:
-    """Bound each query's result list to its own top-k (score desc, docID
-    asc within `key` — a column name or a list of them, e.g.
-    [query_id, subquery_idx] for batch hybrid) with the two-level window:
-    level 1 ranks within each (key, spark partition) and keeps ≤ k rows per
-    partition, level 2 ranks the ≤ n_partitions·k survivors per query. No
-    per-query global sort; a head query over 10¹² docs never funnels its
-    full match set through one reducer."""
+    """Bound each query's result list to its own top-k, adding `rank`.
+    Rows rank by `order` (default score desc, docID asc) within `key` — a
+    column name or a list of them, e.g. [query_id, subquery_idx] for batch
+    hybrid.
+
+    Two-level window, the bounded-heap analog of the reference's per-shard
+    HitQueue + coordinator merge (search/collector/
+    HybridTopScoreDocCollector.java:126-133): level 1 ranks within each
+    (key, spark partition) and keeps ≤ k rows per partition, level 2 ranks
+    the ≤ n_partitions·k survivors per key. No per-query global sort; a
+    head query over 10¹² docs never funnels its full match set through one
+    reducer."""
     keys = [key] if isinstance(key, str) else list(key)
-    order = [F.col("score").desc(), F.col("docID").asc()]
+    order = order or [F.col("score").desc(), F.col("docID").asc()]
     w_local = Window.partitionBy(*keys, "_pid").orderBy(*order)
     local = (
         scores.withColumn("_pid", F.spark_partition_id())
@@ -72,42 +67,16 @@ def bm25_score_batch(
     term_stats: DataFrame,
     meta: DataFrame,
     queries: DataFrame,
-    k1: float = K1,
-    b: float = B,
-    broadcast_queries: bool | None = None,
 ) -> DataFrame:
     """(query_id, docID, score) for EVERY matching (query, doc) pair.
 
     `queries` is (query_id, term, weight) — one row per query term; any
-    number of queries. `broadcast_queries` forces/forbids broadcasting the
-    matched-terms frame into the postings join; default (None) lets
-    Catalyst/AQE decide from its size estimate, which picks broadcast for
-    eval-set-sized batches and a shuffle-hash join on `term` for huge ones.
-    """
-    m = meta.first()
-    n_docs, avgdl = m["N"], float(m["avgdl"])
+    number of queries."""
     q = queries.select(
-        "query_id", F.col("term").alias("q_term"), F.col("weight").cast("double").alias("q_weight")
+        F.col("term").alias("q_term"), F.col("weight").cast("double").alias("q_weight"), "query_id"
     )
-    scored_terms = q.join(term_stats, q.q_term == term_stats.term).select(
-        "query_id",
-        "term",
-        (F.col("q_weight") * idf_col(F.col("df"), F.lit(n_docs))).alias("w_idf"),
-    )
-    cand = _inlist_pruned(postings, q.select(F.col("q_term").alias("term")))
-    if broadcast_queries is True:
-        scored_terms = F.broadcast(scored_terms)
-    elif broadcast_queries is False:
-        # an explicit shuffle-hash hint, not just the absence of the
-        # broadcast hint — Catalyst/AQE would otherwise still auto-broadcast
-        # a small matched-terms frame
-        scored_terms = scored_terms.hint("shuffle_hash")
-    cand = cand.join(scored_terms, "term")
-    if "dl" not in cand.columns:
-        cand = cand.join(doclens, "docID")
-    part = F.col("w_idf") * bm25_score_col(F.col("tf"), F.col("dl"), F.lit(avgdl), k1, b)
     return (
-        cand.select("query_id", "docID", part.alias("part"))
+        bm25_parts(postings, doclens, term_stats, meta, q)
         .groupBy("query_id", "docID")
         .agg(F.sum("part").alias("score"))
     )
@@ -120,31 +89,11 @@ def bm25_topk_batch(
     meta: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
-    broadcast_queries: bool | None = None,
 ) -> DataFrame:
     """(query_id, rank, docID, score) — per-query top-k over the whole
     query batch in one postings pass."""
-    scores = bm25_score_batch(
-        postings, doclens, term_stats, meta, queries, k1, b, broadcast_queries
-    )
+    scores = bm25_score_batch(postings, doclens, term_stats, meta, queries)
     return per_query_topk(scores, k).select("query_id", "rank", "docID", "score")
-
-
-def _inlist_pruned(table: DataFrame, queries: DataFrame, term_col: str = "term") -> DataFrame:
-    """Push the batch's distinct terms into the scan as a literal IN-list
-    when the vocabulary is small enough for row-group skipping (a broadcast
-    join does not push build-side keys into the probe scan); above
-    MAX_INLIST_TERMS the scan stays full — correct for huge batches whose
-    vocabulary approaches the corpus vocabulary anyway."""
-    distinct_terms = [
-        r[term_col]
-        for r in queries.select(term_col).distinct().limit(MAX_INLIST_TERMS + 1).collect()
-    ]
-    if len(distinct_terms) <= MAX_INLIST_TERMS:
-        return table.where(F.col(term_col).isin(sorted(distinct_terms)))
-    return table
 
 
 def sparse_score_batch(
@@ -196,36 +145,22 @@ def fused_subquery_scores_batch(
     term_stats: DataFrame,
     meta: DataFrame,
     queries: DataFrame,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """(query_id, subquery_idx, docID, score): every BM25 sub-query of every
     hybrid query in a batch, scored in ONE postings pass.
 
     `queries` is (query_id, subquery_idx, term, weight). The batch analog of
-    hybrid.fused_bm25_subquery_scores — the (subquery_idx, term, w_idf)
-    relation just grows a query_id column; the scan and the
-    (query_id, subquery_idx, docID) exchange stay single."""
-    m = meta.first()
-    n_docs, avgdl = m["N"], float(m["avgdl"])
+    hybrid.fused_bm25_subquery_scores: the kernel's key grows a query_id
+    column; the scan and the (query_id, subquery_idx, docID) exchange stay
+    single."""
     q = queries.select(
-        "query_id",
-        "subquery_idx",
         F.col("term").alias("q_term"),
         F.col("weight").cast("double").alias("q_weight"),
-    )
-    scored_terms = q.join(term_stats, q.q_term == term_stats.term).select(
         "query_id",
         "subquery_idx",
-        "term",
-        (F.col("q_weight") * idf_col(F.col("df"), F.lit(n_docs))).alias("w_idf"),
     )
-    cand = _inlist_pruned(postings, queries).join(scored_terms, "term")
-    if "dl" not in cand.columns:
-        cand = cand.join(doclens, "docID")
-    part = F.col("w_idf") * bm25_score_col(F.col("tf"), F.col("dl"), F.lit(avgdl), k1, b)
     return (
-        cand.select("query_id", "subquery_idx", "docID", part.alias("part"))
+        bm25_parts(postings, doclens, term_stats, meta, q)
         .groupBy("query_id", "subquery_idx", "docID")
         .agg(F.sum("part").alias("score"))
     )
@@ -243,8 +178,6 @@ def hybrid_topk_batch(
     combination: str = "arithmetic_mean",
     weights: list[float] | None = None,
     subquery_k: int | None = None,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """(query_id, rank, docID, score) — per-query hybrid top-k for a batch
     of hybrid queries, one postings scan total.
@@ -261,9 +194,7 @@ def hybrid_topk_batch(
         rrf_combine,
     )
 
-    scores = fused_subquery_scores_batch(
-        postings, doclens, term_stats, meta, queries, k1, b
-    )
+    scores = fused_subquery_scores_batch(postings, doclens, term_stats, meta, queries)
     bounded = per_query_topk(
         scores, subquery_k or k, key=["query_id", "subquery_idx"]
     ).drop("rank")

@@ -15,11 +15,12 @@ exact dl (see query/lucene_norms.py for the parity mode).
 Tie-break: score desc, docID asc — reference
 processor/combination/ScoreCombiner.java:37-50.
 
-Plan shape (checked with .explain): the query-terms side is a literal-backed
-local relation broadcast into the postings join (never a shuffle); stats join
-on `term` is broadcast when `term_stats` is small or pre-joined via the
-segment metadata path; final top-k compiles to TakeOrderedAndProject (bounded
-per-partition heaps + driver merge — no global sort materialization).
+Every relational lexical scorer (bm25_score_all here, bool, hybrid,
+dis_max and the batch scorers) aggregates over one kernel, `bm25_parts`:
+the stats join, the IN-list-pushed postings scan and the per-posting BM25
+part are written once, there. The final top-k compiles to
+TakeOrderedAndProject (bounded per-partition heaps + driver merge — no
+global sort materialization).
 """
 
 from __future__ import annotations
@@ -60,14 +61,86 @@ def query_terms_df(
     return local_frame(spark, rows, "q_term string, q_weight double, q_clauses int")
 
 
+MAX_INLIST_TERMS = 10_000
+
+
+def _inlist_pruned(table: DataFrame, queries: DataFrame) -> DataFrame:
+    """Collect the distinct `term`s of a query DataFrame and push them into
+    `table`'s scan as a literal IN-list (row-group skipping). Above
+    MAX_INLIST_TERMS the scan stays full — correct for huge batches, whose
+    vocabulary approaches the corpus vocabulary anyway."""
+    distinct_terms = [
+        r["term"] for r in queries.select("term").distinct().limit(MAX_INLIST_TERMS + 1).collect()
+    ]
+    if len(distinct_terms) <= MAX_INLIST_TERMS:
+        return table.where(F.col("term").isin(sorted(distinct_terms)))
+    return table
+
+
+def bm25_parts(
+    postings: DataFrame,
+    doclens: DataFrame,
+    term_stats: DataFrame,
+    meta: DataFrame,
+    q: DataFrame,
+    terms: list[str] | None = None,
+    lucene_norms: bool = False,
+) -> DataFrame:
+    """The relational BM25 kernel every lexical scorer aggregates over.
+
+    `q` is a query frame (q_term, q_weight, *keys). The result has one row
+    per matching (query row, posting): (*keys, docID, part), where
+    part = q_weight · idf(term) · tf-norm(tf, dl). Callers sum `part` per
+    (*keys, docID) and add their own match conditions.
+
+    The query terms are pushed into the postings scan as a literal IN-list
+    placed BEFORE the join with the w_idf frame (a broadcast hash join does
+    not push its build-side keys into the probe-side scan), so the parquet
+    scan carries PushedFilters: In(term, […]).
+    - `terms` given (a query frame built on the driver): that list is the
+      IN-list and the w_idf frame is broadcast.
+    - `terms` None (a query DataFrame of any size): _inlist_pruned collects
+      the terms and Catalyst/AQE picks the join — broadcast for small
+      batches, shuffle-hash on `term` for huge ones.
+    Postings without an inline `dl` column get it from `doclens`.
+
+    `lucene_norms=True` quantizes dl with Lucene's SmallFloat int4 scheme
+    (1-byte norms) for rank-identity with a real Lucene BM25; the default
+    keeps exact dl (documented divergence, see analysis/lucene_norms.py).
+    avgdl stays the exact average, as Lucene's avgFieldLength is also
+    computed from sumTotalTermFreq, not from decoded norms.
+    """
+    m = meta.first()
+    n_docs, avgdl = m["N"], float(m["avgdl"])
+    keys = [c for c in q.columns if c not in ("q_term", "q_weight")]
+    scored_terms = q.join(term_stats, q.q_term == term_stats.term).select(
+        "term",
+        *keys,
+        (F.col("q_weight") * idf_col(F.col("df"), F.lit(n_docs))).alias("w_idf"),
+    )
+    if terms is None:
+        cand = _inlist_pruned(postings, q.select(F.col("q_term").alias("term")))
+    else:
+        cand = postings.where(F.col("term").isin(sorted(set(terms))))
+        scored_terms = F.broadcast(scored_terms)
+    cand = cand.join(scored_terms, "term")
+    if "dl" not in cand.columns:
+        cand = cand.join(doclens, "docID")
+    dl_col = F.col("dl")
+    if lucene_norms:
+        from neural_search_spark.analysis.lucene_norms import int4_quantize_col
+
+        dl_col = int4_quantize_col(dl_col)
+    part = F.col("w_idf") * bm25_score_col(F.col("tf"), dl_col, F.lit(avgdl))
+    return cand.select(*keys, "docID", part.alias("part"))
+
+
 def bm25_score_all(
     postings: DataFrame,
     doclens: DataFrame,
     term_stats: DataFrame,
     meta: DataFrame,
     terms: dict[str, float] | list[str],
-    k1: float = K1,
-    b: float = B,
     prefilter: DataFrame | None = None,
     lucene_norms: bool = False,
     min_should_match: int = 0,
@@ -75,7 +148,8 @@ def bm25_score_all(
     exclude: DataFrame | None = None,
     min_match_per_doc: DataFrame | None = None,
 ) -> DataFrame:
-    """All matching docs with exact BM25 scores: (docID, score).
+    """All matching docs with exact BM25 scores: (docID, score) — the
+    bm25_parts sum per doc, keyed on each term's clause count.
 
     `prefilter`, if given, is a (docID) DataFrame; candidates are restricted
     *before* scoring via left-semi join, but collection statistics stay
@@ -102,54 +176,17 @@ def bm25_score_all(
     docID-keyed join against the (query-bounded) matched-docs frame; the
     threshold check rides the same aggregation output, no extra pass.
 
-    `lucene_norms=True` quantizes dl with Lucene's SmallFloat int4 scheme
-    (1-byte norms) for rank-identity with a real Lucene BM25; the default
-    keeps exact dl (documented divergence, see analysis/lucene_norms.py).
-    Note avgdl stays the exact average, as Lucene's avgFieldLength is also
-    computed from sumTotalTermFreq, not from decoded norms.
+    `lucene_norms`: see bm25_parts.
     """
-    spark = postings.sparkSession
-    q = query_terms_df(spark, terms, clause_counts=clause_counts)
-    m = meta.first()
-    n_docs, avgdl = m["N"], float(m["avgdl"])
-
-    scored_terms = (
-        q.join(term_stats, q.q_term == term_stats.term, "inner")
-        .select(
-            "term",
-            "q_weight",
-            "q_clauses",
-            (F.col("q_weight") * idf_col(F.col("df"), F.lit(n_docs))).alias("w_idf"),
-        )
-    )
-    # literal IN-list BEFORE the join: a BroadcastHashJoin does not push its
-    # build-side keys into the probe-side scan, so without this the full
-    # postings table is read per query; with it the parquet scan carries
-    # PushedFilters: In(term, […]) and skips non-matching row groups — at
-    # corpus scale the scan reads only the query terms' posting lists
-    cand = postings.where(F.col("term").isin(sorted(set(terms)))).join(
-        F.broadcast(scored_terms), "term"
-    )
+    q = query_terms_df(postings.sparkSession, terms, clause_counts=clause_counts)
     if prefilter is not None:
-        cand = cand.join(prefilter.select("docID"), "docID", "left_semi")
+        postings = postings.join(prefilter.select("docID"), "docID", "left_semi")
     if exclude is not None:
-        cand = cand.join(exclude.select("docID"), "docID", "left_anti")
-    if "dl" not in cand.columns:
-        # legacy (term, docID, tf) postings: fetch dl with a shuffle join;
-        # build_postings now carries dl inline so the matched-postings
-        # stream normally never exchanges on docID at all
-        cand = cand.join(doclens, "docID")
-    dl_col = F.col("dl")
-    if lucene_norms:
-        from neural_search_spark.analysis.lucene_norms import int4_quantize_col
-
-        dl_col = int4_quantize_col(dl_col)
-    per_term = cand.select(
-        "docID",
-        "q_clauses",
-        (F.col("w_idf") * bm25_score_col(F.col("tf"), dl_col, F.lit(avgdl), k1, b)).alias("part"),
+        postings = postings.join(exclude.select("docID"), "docID", "left_anti")
+    parts = bm25_parts(
+        postings, doclens, term_stats, meta, q, terms=list(terms), lucene_norms=lucene_norms
     )
-    scores = per_term.groupBy("docID").agg(
+    scores = parts.groupBy("docID").agg(
         F.sum("part").alias("score"), F.sum("q_clauses").alias("_matched_clauses")
     )
     if min_should_match > 1:
@@ -232,9 +269,7 @@ def bm25_topk(
     meta: DataFrame,
     terms: dict[str, float] | list[str],
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     prefilter: DataFrame | None = None,
 ) -> DataFrame:
     """(rank, docID, score) — top-k BM25."""
-    return topk(bm25_score_all(postings, doclens, term_stats, meta, terms, k1, b, prefilter), k)
+    return topk(bm25_score_all(postings, doclens, term_stats, meta, terms, prefilter), k)

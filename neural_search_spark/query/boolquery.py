@@ -16,12 +16,13 @@ Two physical strategies:
 
 ``fused_bool_scores`` — when every clause is a plain lexical disjunction
 (match/term: a weight dict), the whole bool collapses to ONE postings
-scan. Per-term rows carry (summed weight, clause-membership bitmask); a
-single groupBy computes Σ score AND the bit_or of matched-clause bits, so
-must coverage (`mask & M == M`), should counting
-(`bit_count(mask & S) >= msm`) and must_not exclusion (`mask & N == 0`)
-are all decided in the same map-side-combinable aggregation — no join per
-clause, no second scan. Clause count ≤ 63 (single long mask); score
+scan: the bm25.bm25_parts kernel over per-term rows that carry (summed
+weight, clause-membership bitmask). A single groupBy computes Σ score AND
+the bit_or of matched-clause bits, so must coverage (`mask & M == M`),
+should counting (`bit_count(mask & S) >= msm`) and must_not exclusion
+(`mask & N == 0`) are all decided in the same map-side-combinable
+aggregation — no join per clause, no second scan. Clause count ≤ 63
+(single long mask); score
 weights of a term shared by several scoring clauses sum, which matches
 Lucene because idf·tf-norm factors out: Σ_c w_c·idf·tfn = (Σ_c w_c)·idf·tfn.
 
@@ -29,9 +30,8 @@ Lucene because idf·tf-norm factors out: Σ_c w_c·idf·tfn = (Σ_c w_c)·idf·t
 and composes everything else (neural/phrase/multiterm clauses) with the
 generic per-clause join plan.
 
-At 100 TB the fused path is one IN-list-pushed postings scan + one
-exchange on docID — the same shape as a plain BM25 query regardless of
-clause count.
+The fused path has the same plan as a plain BM25 query (one exchange on
+docID) regardless of clause count.
 """
 
 from __future__ import annotations
@@ -39,8 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from neural_search_spark import B, K1
-from neural_search_spark.query.bm25 import bm25_score_col, idf_col
+from neural_search_spark.query.bm25 import bm25_parts
 from neural_search_spark.session import local_frame
 
 MAX_BOOL_CLAUSES = 63  # single int64 bitmask; Lucene's own cap is 1024
@@ -66,8 +65,6 @@ def fused_bool_scores(
     must_not_weights: list[dict[str, float]],
     min_should_match: int = 0,
     prefilter: DataFrame | None = None,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """(docID, score) for an all-lexical bool query in ONE postings scan.
 
@@ -102,27 +99,10 @@ def fused_bool_scores(
 
     qrows = [(t, weight.get(t, 0.0), mask[t]) for t in sorted(mask)]
     q = local_frame(spark, qrows, "q_term string, q_weight double, q_mask long")
-
-    m = meta.first()
-    n_docs, avgdl = m["N"], float(m["avgdl"])
-    scored_terms = q.join(term_stats, q.q_term == term_stats.term).select(
-        "term",
-        "q_mask",
-        (F.col("q_weight") * idf_col(F.col("df"), F.lit(n_docs))).alias("w_idf"),
-    )
-    # literal IN-list before the join → parquet In-pushdown (see bm25.py)
-    cand = postings.where(F.col("term").isin(sorted(mask))).join(
-        F.broadcast(scored_terms), "term"
-    )
     if prefilter is not None:
-        cand = cand.join(prefilter.select("docID"), "docID", "left_semi")
-    per_doc = cand.select(
-        "docID",
-        "q_mask",
-        (F.col("w_idf") * bm25_score_col(F.col("tf"), F.col("dl"), F.lit(avgdl), k1, b)).alias(
-            "part"
-        ),
-    ).groupBy("docID").agg(
+        postings = postings.join(prefilter.select("docID"), "docID", "left_semi")
+    parts = bm25_parts(postings, doclens, term_stats, meta, q, terms=list(mask))
+    per_doc = parts.groupBy("docID").agg(
         F.sum("part").alias("score"), F.bit_or("q_mask").alias("mask")
     )
     cond = F.lit(True)

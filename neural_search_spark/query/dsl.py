@@ -92,7 +92,7 @@ from pyspark.sql import functions as F
 from neural_search_spark.analysis.tokenizer import tokenize_py
 from neural_search_spark.index.build import IndexTables
 from neural_search_spark.query import hybrid as hybrid_mod
-from neural_search_spark.query.bm25 import bm25_score_all, topk
+from neural_search_spark.query.bm25 import bm25_parts, bm25_score_all, topk
 from neural_search_spark.query.boolquery import (
     MAX_BOOL_CLAUSES,
     compose_bool_scores,
@@ -1037,19 +1037,26 @@ class QueryEngine:
     def _lexical_weights(sub: dict) -> dict[str, float] | None:
         """If `sub` is a plain lexical query (match/term, no bool wrapper),
         its BM25 term-weight dict; else None. Used to route all-lexical
-        hybrids through the single-scan fused scorer."""
+        bools, hybrids, dis_max and msearch through the fused single-scan
+        scorers. A malformed `sub` is not lexical: it takes the generic
+        path, whose parse reports the error."""
+        if not isinstance(sub, dict) or len(sub) != 1:
+            return None
         (kind,) = sub.keys()
         body = sub[kind]
-        if kind == "match":
-            _, spec = _single_field(body, "match")
-            if int(spec.get("minimum_should_match", 0)) > 1:
-                return None  # msm is a per-doc clause-count constraint the
-                # weight-sum fusion cannot express — generic path
-            boost = float(spec.get("boost", 1.0))
-            return {t: float(m) * boost for t, m in Counter(tokenize_py(spec["query"])).items()}
-        if kind == "term":
-            _, spec = _single_field(body, "term")
-            return {str(spec["value"]): float(spec.get("boost", 1.0))}
+        try:
+            if kind == "match":
+                _, spec = _single_field(body, "match")
+                if int(spec.get("minimum_should_match", 0)) > 1:
+                    return None  # msm is a per-doc clause-count constraint the
+                    # weight-sum fusion cannot express — generic path
+                boost = float(spec.get("boost", 1.0))
+                return {t: float(m) * boost for t, m in Counter(tokenize_py(spec["query"])).items()}
+            if kind == "term":
+                _, spec = _single_field(body, "term")
+                return {str(spec["value"]): float(spec.get("boost", 1.0))}
+        except (AttributeError, KeyError, TypeError, ValueError):  # incl. QueryValidationError
+            return None
         return None
 
     def _validate_sort(self, sort) -> None:
@@ -1360,50 +1367,33 @@ class QueryEngine:
         (query_id, rank, docID, score) for the whole request list.
 
         Routing: when EVERY query is a plain lexical match/term (no
-        minimum_should_match / filter), the batch compiles to ONE postings
-        scan via query/batch.py (the 8×-amortization path — §5 of
-        BENCH.md); anything else falls back to per-query search() unioned
+        minimum_should_match > 1), the batch compiles to ONE postings scan
+        — the bm25_parts kernel over the driver-built query rows, then
+        batch.per_query_topk (the 8×-amortization path — §5 of BENCH.md);
+        anything else falls back to per-query search() unioned
         with its query_id, which is what the reference does for every
         request anyway (one query per request, HybridQueryExecutor)."""
         if not queries:
             raise QueryValidationError("msearch needs at least one query")
 
-        def lexical_weights(q: dict) -> dict[str, float] | None:
-            if len(q) != 1:
-                return None
-            (kind,) = q.keys()
-            body = q[kind]
-            try:
-                if kind == "match":
-                    _, spec = _single_field(body, "match")
-                    if "minimum_should_match" in spec:
-                        return None
-                    boost = float(spec.get("boost", 1.0))
-                    toks = Counter(tokenize_py(spec["query"]))
-                    return {t: float(m) * boost for t, m in toks.items()} or None
-                if kind == "term":
-                    _, spec = _single_field(body, "term")
-                    return {str(spec["value"]): float(spec.get("boost", 1.0))}
-            except (KeyError, QueryValidationError, TypeError, ValueError):
-                return None
-            return None
-
-        parsed = [lexical_weights(q) for q in queries]
+        parsed = [self._lexical_weights(q) for q in queries]
         if all(p is not None for p in parsed):
-            from neural_search_spark.query.batch import bm25_topk_batch
+            from neural_search_spark.query.batch import per_query_topk
 
             rows = [
-                (qid, t, w)
+                (t, w, qid)
                 for qid, weights in enumerate(parsed)
                 for t, w in sorted(weights.items())
             ]
-            qdf = local_frame(
-                self.docs.sparkSession, rows, "query_id long, term string, weight double"
+            q = local_frame(
+                self.docs.sparkSession, rows, "q_term string, q_weight double, query_id long"
             )
-            return bm25_topk_batch(
-                self.tables.postings, self.tables.doclens, self.tables.term_stats,
-                self.tables.meta, qdf, k=k,
+            t = self.tables
+            parts = bm25_parts(
+                t.postings, t.doclens, t.term_stats, t.meta, q, terms=[r[0] for r in rows]
             )
+            scores = parts.groupBy("query_id", "docID").agg(F.sum("part").alias("score"))
+            return per_query_topk(scores, k).select("query_id", "rank", "docID", "score")
         out = None
         for qid, q in enumerate(queries):
             r = self.search(q, k=k).withColumn("query_id", F.lit(qid).cast("long"))

@@ -19,7 +19,8 @@ Reference semantics reproduced exactly:
   absent weights default to 1.0 per sub-query (ScoreCombinationUtil.java:87);
 - final ordering score desc, docID asc (ScoreCombiner.java:37-50).
 
-Plan shape: each sub-query's top-k is a TakeOrderedAndProject (bounded);
+Plan shape: all lexical sub-queries are scored by one bm25.bm25_parts
+scan keyed on subquery_idx; each sub-query's top-k is bounded;
 normalization stats are a per-subquery groupBy over ≤5k rows broadcast back;
 the pivot/combination runs on ≤ 5·k rows — everything after the sub-query
 scans is effectively driver-scale, matching the reference's coordinator
@@ -31,9 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from neural_search_spark import B, K1
 from neural_search_spark.index.build import IndexTables
-from neural_search_spark.query.bm25 import bm25_score_col, idf_col
+from neural_search_spark.query.batch import per_query_topk
+from neural_search_spark.query.bm25 import bm25_parts, topk
 from neural_search_spark.session import local_frame
 
 MIN_SCORE = 0.001  # MinMaxScoreNormalizationTechnique.java:26
@@ -41,35 +42,19 @@ MAX_SUBQUERIES = 5  # HybridQueryBuilder.java:56
 
 
 def per_subquery_topk(scores: DataFrame, k: int, order: list | None = None) -> DataFrame:
-    """Bound each sub-query's result list to its own top-k (rank by `order`,
-    default score desc, docID asc within subquery_idx). A custom `order`
-    (sort-field columns) is the HybridTopFieldDocSortCollector analog: with
-    a search sort, each sub-query's bounded heap competes on the SORT
-    criteria, not the score (FieldValueHitQueue,
-    search/collector/HybridTopFieldDocSortCollector.java:198-242).
-
-    Two-level top-k — the bounded-heap analog of the reference's per-shard
-    HitQueue + coordinator merge (search/collector/HybridTopScoreDocCollector
-    .java:126-133). Level 1 ranks within each (subquery_idx, spark partition)
-    — distributed across all partitions, never a per-subquery global sort —
-    and keeps ≤ k rows per partition. Level 2 ranks the ≤ n_partitions·k
-    survivors per sub-query (coordinator-scale input). A common term at 10^12
-    docs no longer funnels ~10^10 rows through one reducer.
+    """Bound each sub-query's result list to its own top-k — the two-level
+    batch.per_query_topk keyed on subquery_idx, without the rank column.
+    A custom `order` (sort-field columns) is the
+    HybridTopFieldDocSortCollector analog: with a search sort, each
+    sub-query's bounded heap competes on the SORT criteria, not the score
+    (FieldValueHitQueue, search/collector/HybridTopFieldDocSortCollector
+    .java:198-242).
 
     Callers that hold the per-sub-query frames separately should prefer
     `orderBy().limit(k)` per frame before the union (TakeOrderedAndProject);
     this function covers the already-unioned shape.
     """
-    order = order or [F.col("score").desc(), F.col("docID").asc()]
-    w_local = Window.partitionBy("subquery_idx", "_pid").orderBy(*order)
-    local = (
-        scores.withColumn("_pid", F.spark_partition_id())
-        .withColumn("_r", F.row_number().over(w_local))
-        .where(F.col("_r") <= k)
-        .drop("_r", "_pid")
-    )
-    w_global = Window.partitionBy("subquery_idx").orderBy(*order)
-    return local.withColumn("_r", F.row_number().over(w_global)).where(F.col("_r") <= k).drop("_r")
+    return per_query_topk(scores, k, key="subquery_idx", order=order).drop("rank")
 
 
 def bounded_subquery_union(per: list[DataFrame], k: int) -> DataFrame:
@@ -89,21 +74,18 @@ def bounded_subquery_union(per: list[DataFrame], k: int) -> DataFrame:
 def fused_bm25_subquery_scores(
     index: IndexTables,
     subqueries: list[dict[str, float] | list[str]],
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """Score every BM25 sub-query in ONE pass over the postings table:
     (subquery_idx, docID, score).
 
     Calling bm25_score_all per sub-query scans the postings once per
     sub-query — n full scans at corpus scale (a broadcast join does not
-    prune the probe side). Here all sub-queries' terms go into a single
-    broadcast (subquery_idx, term, w_idf) frame and a single IN-list-pushed
-    scan; the per-(subquery, doc) aggregation is one shuffle keyed on
-    (subquery_idx, docID). Collection stats stay global per the reference
-    (query/HybridQuery.java:43-60)."""
+    prune the probe side). Here all sub-queries' terms share one
+    bm25_parts scan keyed on subquery_idx; the per-(subquery, doc)
+    aggregation is one shuffle keyed on (subquery_idx, docID). Collection
+    stats stay global per the reference (query/HybridQuery.java:43-60)."""
     return (
-        fused_bm25_subquery_parts(index, subqueries, k1=k1, b=b)
+        fused_bm25_subquery_parts(index, subqueries)
         .groupBy("subquery_idx", "docID")
         .agg(F.sum("part").alias("score"))
     )
@@ -112,39 +94,26 @@ def fused_bm25_subquery_scores(
 def fused_bm25_subquery_parts(
     index: IndexTables,
     subqueries: list[dict[str, float] | list[str]],
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """Pre-aggregation variant of fused_bm25_subquery_scores: the same ONE
-    IN-list-pushed postings scan, returning per-posting (subquery_idx,
-    docID, part) rows BEFORE any exchange. Callers that combine sub-query
-    scores per doc (dis_max) can aggregate these with per-subquery
-    conditional sums in a single docID-keyed groupBy — one exchange total
-    instead of (subquery_idx, docID) + docID chained exchanges."""
-    spark = index.postings.sparkSession
-    m = index.meta.first()
-    n_docs = m["N"]
-    avgdl = float(m["avgdl"])
+    postings scan, returning per-posting (subquery_idx, docID, part) rows
+    BEFORE any exchange. Callers that combine sub-query scores per doc
+    (dis_max) can aggregate these with per-subquery conditional sums in a
+    single docID-keyed groupBy — one exchange total instead of
+    (subquery_idx, docID) + docID chained exchanges."""
     rows = []
     for idx, terms in enumerate(subqueries):
         pairs = (
             sorted(terms.items()) if isinstance(terms, dict) else [(t, 1.0) for t in sorted(set(terms))]
         )
-        rows.extend((idx, t, float(w)) for t, w in pairs)
-    q = local_frame(spark, rows, "subquery_idx int, q_term string, q_weight double")
-    scored_terms = q.join(index.term_stats, q.q_term == index.term_stats.term).select(
-        "subquery_idx",
-        "term",
-        (F.col("q_weight") * idf_col(F.col("df"), F.lit(n_docs))).alias("w_idf"),
+        rows.extend((t, float(w), idx) for t, w in pairs)
+    q = local_frame(
+        index.postings.sparkSession, rows, "q_term string, q_weight double, subquery_idx int"
     )
-    all_terms = sorted({t for _, t, _ in rows})
-    cand = index.postings.where(F.col("term").isin(all_terms)).join(
-        F.broadcast(scored_terms), "term"
+    return bm25_parts(
+        index.postings, index.doclens, index.term_stats, index.meta, q,
+        terms=[t for t, _, _ in rows],
     )
-    if "dl" not in cand.columns:
-        cand = cand.join(index.doclens, "docID")
-    part = F.col("w_idf") * bm25_score_col(F.col("tf"), F.col("dl"), F.lit(avgdl), k1, b)
-    return cand.select("subquery_idx", "docID", part.alias("part"))
 
 
 def normalize_scores(
@@ -280,20 +249,15 @@ def hybrid_rrf_topk(
     rank_constant: int = 60,
     weights: list[float] | None = None,
     subquery_k: int | None = None,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """Hybrid pipeline with RRF fusion instead of normalize+combine —
     same ONE-postings-scan sub-query scoring, rank-based reduction."""
     if not 1 <= len(subqueries) <= MAX_SUBQUERIES:
         raise ValueError(f"hybrid query accepts 1..{MAX_SUBQUERIES} sub-queries (HybridQueryBuilder.java:56)")
     subquery_k = subquery_k or k
-    scores = fused_bm25_subquery_scores(index, subqueries, k1, b)
+    scores = fused_bm25_subquery_scores(index, subqueries)
     bounded = per_subquery_topk(scores, subquery_k)
-    combined = rrf_combine(bounded, len(subqueries), rank_constant, weights)
-    top = combined.orderBy(F.col("score").desc(), F.col("docID").asc()).limit(k)
-    w = Window.orderBy(F.col("score").desc(), F.col("docID").asc())
-    return top.withColumn("rank", F.row_number().over(w)).select("rank", "docID", "score")
+    return topk(rrf_combine(bounded, len(subqueries), rank_constant, weights), k)
 
 
 def hybrid_topk(
@@ -304,17 +268,12 @@ def hybrid_topk(
     combination: str = "arithmetic_mean",
     weights: list[float] | None = None,
     subquery_k: int | None = None,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """Full hybrid pipeline over BM25 sub-queries → (rank, docID, score)."""
     if not 1 <= len(subqueries) <= MAX_SUBQUERIES:
         raise ValueError(f"hybrid query accepts 1..{MAX_SUBQUERIES} sub-queries (HybridQueryBuilder.java:56)")
     subquery_k = subquery_k or k
-    scores = fused_bm25_subquery_scores(index, subqueries, k1, b)
+    scores = fused_bm25_subquery_scores(index, subqueries)
     bounded = per_subquery_topk(scores, subquery_k)
     normalized = normalize_scores(bounded, normalization)
-    combined = combine_scores(normalized, len(subqueries), combination, weights)
-    top = combined.orderBy(F.col("score").desc(), F.col("docID").asc()).limit(k)
-    w = Window.orderBy(F.col("score").desc(), F.col("docID").asc())
-    return top.withColumn("rank", F.row_number().over(w)).select("rank", "docID", "score")
+    return topk(combine_scores(normalized, len(subqueries), combination, weights), k)

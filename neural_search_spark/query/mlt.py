@@ -28,7 +28,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from neural_search_spark import B, K1
 from neural_search_spark.query.bm25 import bm25_score_all, idf_col, topk
 
 
@@ -80,8 +79,6 @@ def mlt_score_all(
     max_doc_freq: int | None = None,
     include: bool = False,
     boost: float = 1.0,
-    k1: float = K1,
-    b: float = B,
     prefilter: DataFrame | None = None,
 ) -> DataFrame:
     """(docID, score): BM25 over the examples' selected terms; example docs
@@ -95,7 +92,7 @@ def mlt_score_all(
         return postings.sparkSession.createDataFrame([], "docID long, score double")
     scored = bm25_score_all(
         postings, doclens, term_stats, meta,
-        {t: float(boost) for t in terms}, k1=k1, b=b, prefilter=prefilter,
+        {t: float(boost) for t in terms}, prefilter=prefilter,
     )
     if not include:
         scored = scored.where(~F.col("docID").isin([int(d) for d in doc_ids]))

@@ -45,7 +45,6 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from neural_search_spark import B, K1
 from neural_search_spark.query.bm25 import bm25_score_all
 
 MAX_CLAUSES = 1024  # Lucene indices.query.bool.max_clause_count default
@@ -247,8 +246,6 @@ def multiterm_score_all(
     max_clauses: int = MAX_CLAUSES,
     inlist_limit: int = INLIST_LIMIT,
     prefilter: DataFrame | None = None,
-    k1: float = K1,
-    b: float = B,
 ) -> DataFrame:
     """All matching docs for a prefix/wildcard/fuzzy query: (docID, score).
 
@@ -271,7 +268,7 @@ def multiterm_score_all(
             return postings.sparkSession.createDataFrame([], "docID long, score double")
         return bm25_score_all(
             postings, doclens, term_stats, meta, weights,
-            k1=k1, b=b, prefilter=prefilter,
+            prefilter=prefilter,
         )
 
     if rewrite != "constant_score":

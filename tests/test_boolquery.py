@@ -4,6 +4,8 @@ path."""
 
 from __future__ import annotations
 
+import dataclasses
+
 import pytest
 
 from neural_search_spark.analysis.tokenizer import tokenize_py
@@ -12,6 +14,7 @@ from neural_search_spark.query.boolquery import (
     default_min_should_match,
     fused_bool_scores,
 )
+from neural_search_spark.query.dsl import QueryEngine
 
 from tests import oracle
 
@@ -145,7 +148,7 @@ def test_compose_pure_must_not(transcripts, index_tables):
 # ---------------------------------------------------------------------------
 
 
-def test_dsl_bool_full_shape(engine, transcripts):
+def test_dsl_bool_full_shape(engine, transcripts, index_tables):
     docs = _corpus(transcripts)
     q = {"bool": {
         "must": [{"match": {"text": {"query": "merge sort"}}}],
@@ -159,6 +162,28 @@ def test_dsl_bool_full_shape(engine, transcripts):
     assert set(got) == set(expected)
     for d, s in expected.items():
         assert got[d] == pytest.approx(s, rel=1e-9)
+
+    # postings without the inline dl column (term, docID, tf): every
+    # lexical route joins doclens for dl and returns the same hits
+    bare = QueryEngine(
+        tables=dataclasses.replace(
+            index_tables, postings=index_tables.postings.select("term", "docID", "tf")
+        ),
+        docs=transcripts,
+    )
+    hybrid = {"hybrid": {"queries": [
+        {"match": {"text": "merge sort"}}, {"term": {"text": {"value": "heap"}}},
+    ]}}
+    for query in (q, {"match": {"text": "merge heap data"}}, hybrid):
+        want = {r["docID"]: r["score"] for r in engine.search(query, k=len(docs)).collect()}
+        have = {r["docID"]: r["score"] for r in bare.search(query, k=len(docs)).collect()}
+        assert want and set(have) == set(want), query
+        assert have == pytest.approx(want, rel=1e-12), query
+    reqs = [{"match": {"text": "merge sort"}}, {"term": {"text": {"value": "heap"}}}]
+    want = {(r["query_id"], r["docID"]): r["score"] for r in engine.msearch(reqs, k=len(docs)).collect()}
+    have = {(r["query_id"], r["docID"]): r["score"] for r in bare.msearch(reqs, k=len(docs)).collect()}
+    assert want and set(have) == set(want)
+    assert have == pytest.approx(want, rel=1e-12)
 
 
 def test_dsl_bool_generic_path_with_fuzzy_clause(engine, transcripts):

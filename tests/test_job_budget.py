@@ -31,7 +31,7 @@ OPS = {
         "queries": [match("the data"), match("spark")],
         "normalization": "min_max", "combination": "arithmetic_mean"}}, k=5).collect(), 7),
     "msearch": (lambda store, eng: eng.msearch(
-        [match("data"), match("spark query"), match("the index")], k=5).collect(), 8),
+        [match("data"), match("spark query"), match("the index")], k=5).collect(), 6),
 }
 
 

@@ -843,12 +843,12 @@ def test_dsl_neural_rescore(spark, neural_engine):
 
 
 def test_dsl_hybrid_fused_single_postings_scan(spark, transcripts, index_tables, tmp_path):
-    """Plan-shape lock: an all-lexical hybrid must compile to exactly ONE
-    scan of the postings table (fused sub-query scoring + window-based
-    normalization; a groupBy-self-join normalization would plan the scan
-    once per reference)."""
-    import re
-
+    """Plan-shape lock: every all-lexical DSL route (match, fused bool,
+    hybrid, dis_max, msearch) must compile to exactly ONE scan of the
+    postings table, with the query terms pushed into it as an In(term, …)
+    filter (fused sub-query scoring + window-based normalization; a
+    groupBy-self-join normalization would plan the scan once per
+    reference)."""
     from neural_search_spark.index.build import IndexTables
     from neural_search_spark.query.dsl import QueryEngine
 
@@ -861,41 +861,38 @@ def test_dsl_hybrid_fused_single_postings_scan(spark, transcripts, index_tables,
         meta=index_tables.meta,
     )
     eng = QueryEngine(tables=t2, docs=transcripts)
-    res = eng.search(
-        {"hybrid": {"queries": [
-            {"match": {"text": "the data"}},
-            {"match": {"text": "spark model"}},
-            {"term": {"text": {"value": "user"}}},
-        ]}},
-        k=10,
-    )
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    # count data scans only: Spark's InjectRuntimeFilter may add term-only
-    # bloom-builder Subquery scans — those are an optimization artifact,
-    # not a second pass over the posting payload
-    data_scans = [
-        ln for ln in plan.splitlines()
-        if "FileScan parquet" in ln and "docID" in ln
-    ]
-    assert len(data_scans) == 1, plan
-    assert res.count() == 10
+
+    def postings_scans(res):
+        plan = res._jdf.queryExecution().executedPlan().toString()
+        # count data scans only: Spark's InjectRuntimeFilter may add
+        # term-only bloom-builder Subquery scans — those are an optimization
+        # artifact, not a second pass over the posting payload
+        return [ln for ln in plan.splitlines() if "FileScan parquet" in ln and "docID" in ln], plan
+
+    two = [{"match": {"text": "the data"}}, {"match": {"text": "spark model"}}]
+    reads = {
+        "match": eng.search({"match": {"text": "the data spark"}}, k=10),
+        "bool": eng.search({"bool": {
+            "must": [two[0]], "should": [two[1]],
+            "must_not": [{"term": {"text": {"value": "index"}}}],
+            "filter": [{"eq": ["role", "user"]}]}}, k=10),
+        "hybrid": eng.search({"hybrid": {"queries": two + [
+            {"term": {"text": {"value": "user"}}}]}}, k=10),
+        "dis_max": eng.search({"dis_max": {"queries": two, "tie_breaker": 0.3}}, k=10),
+        "msearch": eng.msearch(two + [{"term": {"text": {"value": "user"}}}], k=10),
+    }
+    for name, res in reads.items():
+        scans, plan = postings_scans(res)
+        assert len(scans) == 1, (name, plan)
+        assert "PushedFilters: [In(term, [" in scans[0], (name, scans[0])
+        assert res.count() > 0, name
+    assert reads["hybrid"].count() == 10
 
     # SORTED hybrid keeps the same single fused scan: the sort-key join and
     # field-bounded windows must not re-plan the postings pass
-    res2 = eng.search(
-        {"hybrid": {"queries": [
-            {"match": {"text": "the data"}},
-            {"match": {"text": "spark model"}},
-        ]}},
-        k=10,
-        sort=[("turn_idx", "desc")],
-    )
-    plan2 = res2._jdf.queryExecution().executedPlan().toString()
-    postings_scans2 = [
-        ln for ln in plan2.splitlines()
-        if "FileScan parquet" in ln and "tf" in ln
-    ]
-    assert len(postings_scans2) == 1, plan2
+    res2 = eng.search({"hybrid": {"queries": two}}, k=10, sort=[("turn_idx", "desc")])
+    scans2, plan2 = postings_scans(res2)
+    assert len(scans2) == 1, plan2
     assert res2.count() == 10
 
 
