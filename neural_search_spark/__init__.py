@@ -6,8 +6,9 @@ Subpackages
 -----------
 analysis   tokenization / normalization (vectorized, reproducible)
 data       deterministic transcripts synthesizer + scalable docID assignment
-index      posting-list construction, delta+varint codec, salted segment
-           build with block-max metadata, manifests + checkpoint-resume
+index      posting-list construction, salted segment build (posting blocks
+           as docids/tfs/dls Spark arrays, block-max metadata), manifests +
+           checkpoint-resume
 query      BM25 top-k, block-max WAND pruning, sparse linear scoring,
            two-phase pruning, hybrid normalization + combination, paging
 ops        chunking, rerank, dedup (exact/minhash/simhash/jaccard/embedding),

@@ -1,4 +1,4 @@
-"""Compressed posting segments: salted build, block-max metadata, merge.
+"""Posting segments: salted build, block-max metadata, merge.
 
 Output table (one row per posting block; parquet, directory-partitioned by
 `shard` for query-time file pruning):
@@ -10,16 +10,25 @@ Output table (one row per posting block; parquet, directory-partitioned by
     first_docID: long     min docID in block   (block-level zone map)
     last_docID: long      max docID in block
     n: int                postings in block (≤ block_size)
-    max_score_component: float
-                          max over block of tf/(tf + k1·(1-b+b·dl/avgdl))
-                          — exact per-block BM25 upper-bound factor; query UB
+    max_score_component: double
+                          max over block of tf/(tf + k1·(1-b+b·dl/avgdl)),
+                          computed by the scorer's own expression
+                          (query.bm25.bm25_score_col), so it is an exact
+                          per-block BM25 upper-bound factor; query UB
                           = w_q·idf(t)·max_score_component (block-max WAND,
                           the set-at-a-time analog of the reference's
                           HybridScoreBlockBoundaryPropagator.java:39-98)
-    docids: binary        delta+varint (strictly increasing within block)
-    tfs: binary           varint
-    dls: binary           varint — doc length carried IN the segment so
-                          query-time scoring needs no doclens shuffle join
+    docids: array<long>   ascending docIDs of the block
+    tfs: array<int>       term frequencies, aligned with docids
+    dls: array<int>       doc lengths, aligned with docids — carried IN the
+                          segment so query-time scoring needs no doclens
+                          shuffle join
+
+The arrays are Spark's own columnar layout, built and read only by Spark
+expressions (collect_list at build, inline(arrays_zip(...)) at query and
+merge time), so no posting crosses into Python. write_segments stores them
+with parquet's v2 writer and no dictionary, which delta-encodes the sorted
+docID lists (DELTA_BINARY_PACKED).
 
 Skew handling (the reference shards by document and never partitions by term
 — term skew is specific to our term-major layout): head terms whose df
@@ -30,41 +39,26 @@ ordered across salts, so the hierarchical merge of salted sub-segments is
 pure concatenation — no k-way interleave.  Tail terms (the vast majority)
 get salt 0 and hash-partition by term alone.
 
-Physical build: one `repartition(term, salt)` shuffle, then
-sortWithinPartitions(term, salt, docID) + mapInArrow — a single pass of
-vectorized numpy per partition, carrying group fragments across Arrow batch
-boundaries (no per-row Python, no per-term applyInPandas group overhead, no
-pandas materialization: binary output columns are zero-copy Arrow buffers).
+Physical build: a row_number over (term, salt) ordered by docID assigns
+each posting its block, then one groupBy(term, salt, blockID) aggregates the
+block row. The window's (term, salt) exchange also serves the groupBy, so
+the build is one shuffle.
 """
 
 from __future__ import annotations
 
-import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from neural_search_spark import B, K1
-from neural_search_spark.index.codec import varint_encode_all
+from neural_search_spark.query.bm25 import bm25_score_col
+
+#: recorded in manifests and meta.json; a resumed build rebuilds every stage
+#: written under another version
+CODEC_VERSION = "arrays-v1"
 
 BLOCK_SIZE = 128
 POSTINGS_PER_SALT = 250_000
 N_SHARDS = 32
-
-SEGMENT_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType(), False),
-        T.StructField("salt", T.IntegerType(), False),
-        T.StructField("blockID", T.IntegerType(), False),
-        T.StructField("first_docID", T.LongType(), False),
-        T.StructField("last_docID", T.LongType(), False),
-        T.StructField("n", T.IntegerType(), False),
-        T.StructField("max_score_component", T.FloatType(), False),
-        T.StructField("docids", T.BinaryType(), False),
-        T.StructField("tfs", T.BinaryType(), False),
-        T.StructField("dls", T.BinaryType(), False),
-    ]
-)
 
 
 def shard_col(term_col) -> F.Column:
@@ -139,122 +133,12 @@ def shard_of(term: str) -> int:
     return xxhash64_py(term.encode("utf-8")) % N_SHARDS
 
 
-def _binary_array(cum_offsets: np.ndarray, bstart: np.ndarray, n_rows: int, data: bytes):
-    """Zero-copy Arrow binary column: block i's bytes are
-    data[cum_offsets[bstart[i]] : cum_offsets[bstart[i+1]]]. Blocks are
-    consecutive row ranges, so the per-block byte ranges tile the whole
-    buffer — the column is just (offsets at block boundaries, data); no
-    per-block Python `bytes` objects are ever created."""
-    import pyarrow as pa
-
-    bounds = np.empty(len(bstart) + 1, dtype=np.int64)
-    bounds[:-1] = cum_offsets[bstart]
-    bounds[-1] = cum_offsets[n_rows]
-    # pa.binary() carries int32 offsets; a ≥2 GiB encoded stream in one
-    # chunk (possible with a huge postings_per_salt override — the pending
-    # tail group accumulates across Arrow batches unbounded) would silently
-    # wrap the offsets and corrupt posting blocks. Fail loudly instead.
-    if bounds[-1] >= (1 << 31):
-        raise ValueError(
-            f"encoded posting chunk is {bounds[-1]} bytes, overflowing int32 "
-            "binary offsets — lower postings_per_salt so no (term, salt) "
-            "group's encoded bytes reach 2 GiB"
-        )
-    return pa.Array.from_buffers(
-        pa.binary(),
-        len(bstart),
-        [None, pa.py_buffer(bounds.astype(np.int32)), pa.py_buffer(data)],
-    )
-
-
-def _encode_chunk(cols: dict[str, np.ndarray], avgdl: float, block_size: int):
-    """Vectorized multi-group encoder: one sorted (_tid, _tid2, salt, docID)
-    chunk of numpy columns → an Arrow RecordBatch of block rows, with NO
-    per-group OR per-block Python loop. Group/block boundaries, delta
-    streams, varint bytes, and block max-score are all single numpy passes;
-    the three binary columns are built zero-copy from (offsets, buffer)
-    pairs. Wire-format-identical to encoding each block separately (each
-    block's delta stream starts with an absolute docID).
-
-    The chunk carries no term STRINGS at all — only the two 64-bit term
-    hashes (`_tid`, `_tid2`); the string is re-attached once per BLOCK by a
-    post-encode dictionary join in build_segments. Group boundary detection
-    therefore runs on fixed-width int64 arrays (no object-dtype compares),
-    and the Arrow transfer in AND out of this UDF is fully fixed-width."""
-    import pyarrow as pa
-
-    tids = cols["_tid"]
-    tid2s = cols["_tid2"]
-    salts = cols["salt"]
-    docs = cols["docID"].astype(np.uint64)
-    tfs = cols["tf"].astype(np.uint64)
-    dls = cols["dl"].astype(np.uint64)
-    n = len(tids)
-
-    new_group = np.ones(n, dtype=bool)
-    new_group[1:] = (tids[1:] != tids[:-1]) | (tid2s[1:] != tid2s[:-1]) | (salts[1:] != salts[:-1])
-    gstart = np.flatnonzero(new_group)
-    gid = np.cumsum(new_group) - 1
-    offset_in_group = np.arange(n, dtype=np.int64) - gstart[gid]
-    new_block = new_group | (offset_in_group % block_size == 0)
-    bstart = np.flatnonzero(new_block)
-    bend = np.concatenate((bstart[1:], [n]))
-    bid_global = np.cumsum(new_block) - 1
-    block_id = (bid_global - bid_global[gstart][gid])[bstart]
-
-    prev = np.empty_like(docs)
-    prev[0] = 0
-    prev[1:] = docs[:-1]
-    deltas = np.where(new_block, docs, docs - prev)
-
-    dbytes, dlens = varint_encode_all(deltas)
-    tbytes, tlens = varint_encode_all(tfs)
-    lbytes, llens = varint_encode_all(dls)
-    dcs = np.concatenate(([0], np.cumsum(dlens)))
-    tcs = np.concatenate(([0], np.cumsum(tlens)))
-    lcs = np.concatenate(([0], np.cumsum(llens)))
-
-    tf_f = tfs.astype(np.float64)
-    dl_f = dls.astype(np.float64)
-    comp = tf_f / (tf_f + K1 * (1.0 - B + B * dl_f / avgdl))
-    m64 = np.maximum.reduceat(comp, bstart)
-    # the stored float32 must stay an UPPER bound of the float64 max —
-    # a round-down by one ulp makes the WAND block filter unsound (a block
-    # holding a true top-k doc gets pruned when θ lands inside the ulp gap),
-    # so bump any down-rounded value to the next float32
-    max_comp = m64.astype(np.float32)
-    low = max_comp.astype(np.float64) < m64
-    if low.any():
-        max_comp[low] = np.nextafter(max_comp[low], np.float32(np.inf))
-
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(tids[bstart], pa.int64()),
-            pa.array(tid2s[bstart], pa.int64()),
-            pa.array(salts[bstart].astype(np.int32), pa.int32()),
-            pa.array(block_id.astype(np.int32), pa.int32()),
-            pa.array(docs[bstart].astype(np.int64), pa.int64()),
-            pa.array(docs[bend - 1].astype(np.int64), pa.int64()),
-            pa.array((bend - bstart).astype(np.int32), pa.int32()),
-            pa.array(max_comp, pa.float32()),
-            _binary_array(dcs, bstart, n, dbytes),
-            _binary_array(tcs, bstart, n, tbytes),
-            _binary_array(lcs, bstart, n, lbytes),
-        ],
-        names=[
-            "_tid", "_tid2", "salt", "blockID", "first_docID", "last_docID",
-            "n", "max_score_component", "docids", "tfs", "dls",
-        ],
-    )
-
-
 def build_segments(
     postings_with_dl: DataFrame,
     avgdl: float,
     max_doc_id: int,
     postings_per_salt: int = POSTINGS_PER_SALT,
     block_size: int = BLOCK_SIZE,
-    num_partitions: int | None = None,
     term_stats: DataFrame | None = None,
 ) -> DataFrame:
     """postings_with_dl: (term, docID, tf, dl) → segment block table.
@@ -262,9 +146,6 @@ def build_segments(
     `term_stats` (term, df) supplies the head-term list; only terms with
     df > postings_per_salt enter the (small, broadcast) salt map.
     """
-    spark = postings_with_dl.sparkSession
-    num_partitions = num_partitions or spark.sparkContext.defaultParallelism * 2
-
     if term_stats is None:
         term_stats = postings_with_dl.groupBy("term").agg(F.count("*").alias("df"))
     head = term_stats.filter(F.col("df") > postings_per_salt).select(
@@ -275,155 +156,64 @@ def build_segments(
         "n_salts", F.coalesce(F.col("n_salts"), F.lit(1))
     )
     width = F.greatest(F.ceil(F.lit(max_doc_id + 1) / F.col("n_salts")), F.lit(1))
-    df = df.withColumn("salt", (F.col("docID") / width).cast("int")).drop("n_salts")
+    df = df.withColumn("salt", (F.col("docID") / width).cast("int"))
 
-    # Term strings are dropped BEFORE the big shuffle: each posting row
-    # carries two independent 64-bit term hashes instead of the string, and
-    # the four value columns are PACKED into two int64s —
-    #   _sd = salt·2⁴² + docID   (docID < 2⁴² ≈ 4.4·10¹², salt < 2²²)
-    #   _td = tf·2³² + dl        (tf, dl < 2³²)
-    # so the (term, salt) exchange + sort — the most memory-bound stage of
-    # the build — moves 4 fixed-width int64 slots (~32B/row in UnsafeRow)
-    # instead of 6 (~48B), the sort key collapses to (_tid, _tid2, _sd)
-    # (numeric _sd order ≡ lexicographic (salt, docID) order since both
-    # fields are non-negative and docID occupies the low bits), and the
-    # Arrow hop into the Python encoder carries a third fewer bytes. The
-    # encoder unpacks with two vectorized shifts. The string is re-attached
-    # once per BLOCK (1/128th of the rows) by a dictionary join below. Two
-    # independent hashes make a cross-term collision of the composite key
-    # (2⁻¹²⁸-scale even at 10⁸-term vocabularies: p ≈ n²/2¹²⁹) effectively
-    # impossible; the same argument this encoder already relies on for
-    # adjacent-group boundary detection.
-    if max_doc_id >= (1 << 42):
-        raise ValueError(
-            f"max_doc_id {max_doc_id} exceeds the 2^42 packed-exchange bound "
-            "— widen the _sd packing before indexing >4.4e12 docs"
-        )
-    shuffled = (
-        df.select(
-            F.xxhash64("term").alias("_tid"),
-            F.xxhash64("term", F.lit(0x9E3779B9)).alias("_tid2"),
-            (F.shiftleft(F.col("salt").cast("long"), 42) + F.col("docID")).alias("_sd"),
-            (F.shiftleft(F.col("tf").cast("long"), 32) + F.col("dl")).alias("_td"),
-        )
-        .repartition(num_partitions, "_tid", F.shiftright(F.col("_sd"), 42))
-        .sortWithinPartitions("_tid", "_tid2", "_sd")
+    rn = F.row_number().over(Window.partitionBy("term", "salt").orderBy("docID"))
+    p = df.select(
+        "term", "salt",
+        ((rn - 1) / block_size).cast("int").alias("blockID"),
+        F.col("docID").cast("long").alias("docID"),
+        F.col("tf").cast("int").alias("tf"),
+        F.col("dl").cast("int").alias("dl"),
+    )
+    # collect_list gathers in no fixed order: array_sort on the struct
+    # orders each block by docID (its first field)
+    blocks = p.groupBy("term", "salt", "blockID").agg(
+        F.min("docID").alias("first_docID"),
+        F.max("docID").alias("last_docID"),
+        F.count("*").cast("int").alias("n"),
+        F.max(bm25_score_col(F.col("tf"), F.col("dl"), F.lit(avgdl))).alias("max_score_component"),
+        F.array_sort(F.collect_list(F.struct("docID", "tf", "dl"))).alias("_p"),
+    )
+    return blocks.select(
+        "term", "salt", "blockID", "first_docID", "last_docID", "n", "max_score_component",
+        F.col("_p.docID").alias("docids"),
+        F.col("_p.tf").alias("tfs"),
+        F.col("_p.dl").alias("dls"),
     )
 
-    in_cols = ["_tid", "_tid2", "_sd", "_td"]
-    _SD_MASK = (1 << 42) - 1
-    _TD_MASK = (1 << 32) - 1
 
-    def _unpack(cols: dict[str, np.ndarray]) -> dict[str, np.ndarray]:
-        sd, td = cols["_sd"], cols["_td"]
-        return {
-            "_tid": cols["_tid"],
-            "_tid2": cols["_tid2"],
-            "salt": sd >> 42,
-            "docID": sd & _SD_MASK,
-            "tf": td >> 32,
-            "dl": td & _TD_MASK,
-        }
-
-    def encode_partition(batches):
-        # Arrow-native (mapInArrow): rows never become pandas frames or
-        # Python objects in either direction — int64 numpy views in, a
-        # RecordBatch with zero-copy binary columns out
-        pending: dict[str, np.ndarray] | None = None
-
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            cols = {
-                name: batch.column(name).to_numpy().astype(np.int64, copy=False)
-                for name in in_cols
-            }
-            if pending is not None:
-                cols = {k: np.concatenate([pending[k], cols[k]]) for k in in_cols}
-                pending = None
-            # hold back the trailing (term, salt) group — it may continue in
-            # the next Arrow batch (int group-key comparison; the salt rides
-            # in _sd's high bits so (_tid, _tid2, _sd>>42) is the group key)
-            g, g2, s = cols["_tid"], cols["_tid2"], cols["_sd"] >> 42
-            tail = (g == g[-1]) & (g2 == g2[-1]) & (s == s[-1])
-            ntail = len(g) if tail.all() else int(tail[::-1].argmin())
-            cut = len(g) - ntail
-            pending = {k: v[cut:].copy() for k, v in cols.items()}
-            if cut:
-                yield _encode_chunk(_unpack({k: v[:cut] for k, v in cols.items()}), avgdl, block_size)
-        if pending is not None and len(pending["_tid"]):
-            yield _encode_chunk(_unpack(pending), avgdl, block_size)
-
-    tid_schema = T.StructType(
-        [T.StructField("_tid", T.LongType(), False), T.StructField("_tid2", T.LongType(), False)]
-        + [f for f in SEGMENT_SCHEMA.fields if f.name != "term"]
-    )
-    blocks = shuffled.mapInArrow(encode_partition, schema=tid_schema)
-    # Re-attach the term string once per block via the term dictionary
-    # (vocabulary-sized — 128× fewer rows than postings even if every term
-    # were a singleton). AQE broadcasts it at test scale; at a 10⁸-term
-    # vocabulary it is an ordinary shuffle join over the BLOCK table, still
-    # 128× cheaper than shuffling strings with every posting.
-    tdict = term_stats.select(
-        F.xxhash64("term").alias("_tid"),
-        F.xxhash64("term", F.lit(0x9E3779B9)).alias("_tid2"),
-        "term",
-    )
-    return blocks.join(tdict, ["_tid", "_tid2"]).select(
-        *[f.name for f in SEGMENT_SCHEMA.fields]
-    )
+#: v2 pages with no dictionary delta-encode the sorted docID lists; with
+#: parquet's defaults (v1 pages, dictionary on) the segments of a 10k-turn
+#: index take 1.7x the bytes, and the whole index 25% more
+_PARQUET_OPTIONS = {"parquet.writer.version": "v2", "parquet.enable.dictionary": "false"}
 
 
 def write_segments(segments: DataFrame, path: str) -> None:
-    """Sharded posting files: directory-partitioned by shard(term) so a
-    query touching m terms scans at most m shard directories (partition
-    pruning), with term-level row-group skipping inside via min/max stats."""
+    """The one segment writer. Sharded posting files: directory-partitioned
+    by shard(term) so a query touching m terms scans at most m shard
+    directories (partition pruning), with term-level row-group skipping
+    inside via min/max stats."""
     (
         segments.withColumn("shard", shard_col(F.col("term")))
         .repartition("shard")
         .sortWithinPartitions("term", "salt", "blockID")
         .write.mode("overwrite")
+        .options(**_PARQUET_OPTIONS)
         .partitionBy("shard")
         .parquet(path)
     )
 
 
-POSTINGS_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType(), False),
-        T.StructField("docID", T.LongType(), False),
-        T.StructField("tf", T.IntegerType(), False),
-        T.StructField("dl", T.IntegerType(), False),
-    ]
-)
-
-
 def decode_segments(segments: DataFrame) -> DataFrame:
-    """Segment blocks → relational postings (term, docID, tf, dl). One
-    vectorized varint sweep per Arrow batch (codec.decode_blocks_batch) —
-    the inverse of the build encoder, used by the rebuild merge path."""
-    import pandas as pd
-
-    from neural_search_spark.index.codec import decode_blocks_batch
-
-    def run(batches):
-        for batch in batches:
-            if batch.empty:
-                continue
-            ns = batch["n"].to_numpy(np.int64)
-            block_idx, docids, tfs, dls = decode_blocks_batch(
-                list(batch["docids"]), list(batch["tfs"]), list(batch["dls"]), ns
-            )
-            yield pd.DataFrame(
-                {
-                    "term": batch["term"].to_numpy()[block_idx],
-                    "docID": docids.astype(np.int64),
-                    "tf": tfs.astype(np.int32),
-                    "dl": dls.astype(np.int32),
-                }
-            )
-
-    return segments.mapInPandas(run, schema=POSTINGS_SCHEMA)
+    """Segment blocks → relational postings (term, docID, tf, dl), used by
+    the rebuild merge path."""
+    return segments.select("term", F.inline(F.arrays_zip("docids", "tfs", "dls"))).select(
+        "term",
+        F.col("docids").alias("docID"),
+        F.col("tfs").alias("tf"),
+        F.col("dls").alias("dl"),
+    )
 
 
 def merge_segments(
@@ -451,7 +241,7 @@ def merge_segments(
 
     mode='rebuild' — for overlapping runs (e.g. a head term split across
     separately-built runs over interleaved docID ranges): decode every run
-    back to postings (vectorized), re-derive doclens/avgdl/max docID from
+    back to postings (decode_segments), re-derive doclens/avgdl/max docID from
     the union, and re-run the salted segment build — head terms whose
     merged df exceeds `postings_per_salt` get re-split. Runs must not
     duplicate a (term, docID) posting.

@@ -3,9 +3,11 @@ manifests and checkpoint-resume.
 
 Layout under `out_dir/`:
     docs/           parquet — transcripts + stable docID (fetch-phase source)
+    postings/       parquet — (term, docID, tf, dl)
     doclens/        parquet — (docID, dl)
     term_stats/     parquet — (term, df) exact
-    segments/       parquet, dir-partitioned by shard — compressed blocks
+    segments/       parquet, dir-partitioned by shard — posting blocks with
+                    docids/tfs/dls array columns (index/segments.py)
     meta.json       {N, avgdl, tokenizer_hash, codec_version, source_fingerprint}
     _manifests/{stage}.json
 
@@ -40,8 +42,7 @@ from neural_search_spark.index.build import (
     build_postings,
     build_term_stats,
 )
-from neural_search_spark.index.codec import CODEC_VERSION
-from neural_search_spark.index.segments import build_segments, shard_col
+from neural_search_spark.index.segments import CODEC_VERSION, build_segments, write_segments
 from neural_search_spark.session import local_frame
 
 STAGES = ["docs", "postings", "doclens", "term_stats", "segments"]
@@ -59,14 +60,16 @@ def _count_and_checksum(df: DataFrame) -> tuple[int, str]:
     return int(row["n"]), f"{row['h']}:{row['n']}"
 
 
-def _write_with_metrics(df: DataFrame, path: str, shard: bool = False) -> tuple[int, str]:
-    """Write a stage's parquet and collect its lineage metrics (row count +
-    order-insensitive checksum) IN the write job via `observe` — no second
-    read-back pass per stage. The per-stage metric job was measured as a
-    real serial-latency tax between stages (cores idle while one extra scan
-    per stage runs). `shard=True` appends the shard(term) partition column
-    after the observation point and dir-partitions the output (the
-    write_segments layout)."""
+def _write_parquet(df: DataFrame, path: str) -> None:
+    df.write.mode("overwrite").parquet(path)
+
+
+def _write_with_metrics(df: DataFrame, path: str, write=_write_parquet) -> tuple[int, str]:
+    """Write a stage's parquet with `write(df, path)` and collect its
+    lineage metrics (row count + order-insensitive checksum) IN the write
+    job via `observe` — no second read-back pass per stage. The per-stage
+    metric job was measured as a real serial-latency tax between stages
+    (cores idle while one extra scan per stage runs)."""
     from pyspark.sql import Observation
 
     cols = [F.col(c).cast("string") for c in df.columns]
@@ -76,17 +79,7 @@ def _write_with_metrics(df: DataFrame, path: str, shard: bool = False) -> tuple[
         F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("h"),
         F.count(F.lit(1)).alias("n"),
     )
-    if shard:
-        (
-            observed.withColumn("shard", shard_col(F.col("term")))
-            .repartition("shard")
-            .sortWithinPartitions("term", "salt", "blockID")
-            .write.mode("overwrite")
-            .partitionBy("shard")
-            .parquet(path)
-        )
-    else:
-        observed.write.mode("overwrite").parquet(path)
+    write(observed, path)
     m = obs.get
     return int(m["n"]), f"{m['h']}:{m['n']}"
 
@@ -136,12 +129,11 @@ class IndexStore:
         """Session-cached per-term block-metadata aggregate — exactly what
         segment_search.wand_topk's "job A" computes per query, built ONCE
         per index epoch over ALL terms so every warm query skips the
-        metadata job (2-3 jobs → 1-2). Adds per-term compressed payload
-        bytes, which the auto-router's cost model uses as the decode-volume
-        estimate. Invalidated whenever _epoch() changes (delete/compact/
-        rebuild/append). Returns None when the vocabulary exceeds
-        PLAN_CACHE_MAX_TERMS: at 10⁸-term scale the right cache is the
-        per-query filtered aggregate (bounded by |q|), not a driver dict.
+        metadata job (2-3 jobs → 1-2). Invalidated whenever _epoch()
+        changes (delete/compact/rebuild/append). Returns None when the
+        vocabulary exceeds PLAN_CACHE_MAX_TERMS: at 10⁸-term scale the
+        right cache is the per-query filtered aggregate (bounded by |q|),
+        not a driver dict.
         """
         epoch = self._epoch()
         c = self._plan_cache
@@ -170,11 +162,6 @@ class IndexStore:
                 F.count(F.when(wide, F.lit(1))).alias("nwide"),
                 F.max(F.when(wide, F.col("max_score_component"))).alias("wide_max"),
                 F.max("max_score_component").alias("tmax"),
-                F.sum(
-                    F.octet_length("docids")
-                    + F.octet_length("tfs")
-                    + F.octet_length("dls")
-                ).alias("payload_bytes"),
             )
             .collect()
         )
@@ -189,7 +176,6 @@ class IndexStore:
                     "nwide": int(r["nwide"]),
                     "wide_max": r["wide_max"],
                     "tmax": r["tmax"],
-                    "payload_bytes": int(r["payload_bytes"]),
                 }
                 for r in rows
             },
@@ -295,18 +281,9 @@ class IndexStore:
         tombs = tombs.persist()
         n_del = tombs.count()
 
-        def swap(stage: str, df: DataFrame, shard: bool = False):
+        def swap(stage: str, df: DataFrame, write=_write_parquet):
             tmp = os.path.join(self.path, f"{stage}__compact")
-            if shard:
-                (
-                    df.repartition("shard")
-                    .sortWithinPartitions("term", "salt", "blockID")
-                    .write.mode("overwrite")
-                    .partitionBy("shard")
-                    .parquet(tmp)
-                )
-            else:
-                df.write.mode("overwrite").parquet(tmp)
+            write(df, tmp)
             old = os.path.join(self.path, stage)
             # the epoch moves only once meta.json is rewritten: drop the
             # handles now, or the next read opens the swapped-out files
@@ -326,8 +303,8 @@ class IndexStore:
         pdl = postings if "dl" in postings.columns else postings.join(doclens, "docID")
         segs = build_segments(
             pdl, avgdl=avgdl, max_doc_id=max(n_docs - 1, 0), term_stats=self.term_stats
-        ).withColumn("shard", shard_col(F.col("term")))
-        swap("segments", segs, shard=True)
+        )
+        swap("segments", segs, write_segments)
         self.meta.update({"N": n_docs, "avgdl": avgdl})
         with open(os.path.join(self.path, "meta.json"), "w") as f:
             json.dump(self.meta, f, indent=2, sort_keys=True)
@@ -338,16 +315,15 @@ class IndexStore:
 
     # --- auto-router cost model (calibrated against BENCH.md §4/§6) ------
     # Fixed floors are Spark job-scheduling latency at interactive scale;
-    # the byte terms are what dominate at 100 TB. Segments decode
-    # compressed payload (~4.5 B/posting) through the Arrow kernel;
-    # relational scans the postings parquet (~16 B/posting) plus a doclens
-    # join (~12 B/doc) JVM-side. Engaging the θ/zone prune machinery costs
+    # the byte terms are what dominate at 100 TB. Segments decode an
+    # estimated 5 B/posting of block arrays; relational scans the postings
+    # parquet (~16 B/posting) plus a doclens join (~12 B/doc) JVM-side. Engaging the θ/zone prune machinery costs
     # extra jobs (seed decode + zone agg) — the measured ~3 s penalty that
     # made head-only queries lose on the segment path (§4 head1).
     ROUTER_SEG_FIXED_S = 0.30        # 2-job early-exit floor
     ROUTER_SEG_PRUNE_FIXED_S = 3.50  # 3-4-job prune-path floor (θ seed + zones)
     ROUTER_REL_FIXED_S = 1.00        # scan+shuffle+agg single-job floor
-    ROUTER_SEG_BPS = 150e6           # Arrow-kernel decode throughput
+    ROUTER_SEG_BPS = 150e6           # segment decode throughput
     ROUTER_REL_BPS = 1.5e9           # JVM codegen scan throughput
 
     def topk(
@@ -362,9 +338,9 @@ class IndexStore:
 
         strategy='auto' routes on an estimated-cost model over the session
         plan cache (zero extra Spark jobs when the cache is warm): the
-        segment path is costed at its job floor plus the query terms'
-        compressed payload bytes through the Arrow decode kernel (all
-        blocks — pruning savings are not assumed), the relational path at
+        segment path is costed at its job floor plus an estimated 5 bytes
+        per posting of the query terms' blocks (all blocks — pruning
+        savings are not assumed), the relational path at
         its floor plus postings-parquet plus doclens-join bytes through a
         JVM scan. Small block sets take the segment early-exit outright
         (measured 1.8-4.1× wins, BENCH.md §4); head-heavy queries route
@@ -400,7 +376,6 @@ class IndexStore:
                 ct = plan_cache["terms"]
                 present = [t for t in q_terms if t in ct]
                 est_blocks = sum(ct[t]["nblocks"] for t in present)
-                decode_bytes = sum(ct[t]["payload_bytes"] for t in present)
                 sum_df = sum(ct[t]["df"] for t in present)
             else:
                 # vocabulary too large for a driver cache: one bounded
@@ -411,7 +386,7 @@ class IndexStore:
                 }
                 est_blocks = sum(-(-d // BLOCK_SIZE) for d in dfs.values())
                 sum_df = sum(dfs.values())
-                decode_bytes = 5 * sum_df  # ~4.5 B/posting compressed
+            decode_bytes = 5 * sum_df
             rel_bytes = 16 * sum_df + 12 * int(self.meta["N"])
             if est_blocks <= 512:
                 # early-exit decode: 2 jobs, measured 1.8-4.1× wins
@@ -761,7 +736,7 @@ def build_index(
         if postings_per_salt is not None:
             kwargs["postings_per_salt"] = postings_per_salt
         segs = build_segments(pdl, avgdl=avgdl, max_doc_id=n_docs - 1, term_stats=term_stats, **kwargs)
-        return _write_with_metrics(segs, out_path, shard=True)
+        return _write_with_metrics(segs, out_path, write_segments)
 
     r, _ = run_stage("segments", produce_segments, [c_docs, c_post, c_dl, c_ts])
     results.append(r)

@@ -213,22 +213,14 @@ class QueryEngine:
         QueryValidationError — the fromXContent contract: a query body that
         is not an object, is missing required fields, or carries
         wrong-typed values is a PARSE error, never a raw KeyError/
-        TypeError/AttributeError escaping to the caller (pinned by
-        tests/test_dsl_fuzz.py)."""
-        if not isinstance(q, dict) or len(q) != 1:
-            raise QueryValidationError(
-                f"query dict must have exactly one key, got {sorted(q) if isinstance(q, dict) else type(q).__name__}"
-            )
-        (kind,) = q.keys()
-        if not isinstance(q[kind], dict):
-            raise QueryValidationError(
-                f"{kind} query body must be an object, got {type(q[kind]).__name__}"
-            )
+        TypeError/AttributeError/ValueError escaping to the caller (pinned
+        by tests/test_dsl_fuzz.py)."""
+        kind = self._query_kind(q)
         try:
             return self._score_inner(q, prefilter, in_hybrid, k)
         except QueryValidationError:
             raise
-        except (KeyError, TypeError, AttributeError) as e:
+        except (KeyError, TypeError, AttributeError, ValueError) as e:
             raise QueryValidationError(
                 f"malformed {kind} query: {type(e).__name__}: {e}"
             ) from e

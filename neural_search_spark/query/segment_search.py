@@ -1,4 +1,4 @@
-"""Top-k BM25 over compressed posting segments with block-max WAND pruning.
+"""Top-k BM25 over posting segments with block-max WAND pruning.
 
 The set-at-a-time analog of the reference's WAND/MAXSCORE machinery
 (query/HybridQueryScorer.java:161-171 setMinCompetitiveScore;
@@ -9,8 +9,8 @@ instead of advancing doc-at-a-time iterators past non-competitive blocks, we
 Algorithm (provably exact top-k; zone-aligned block-max — the
 set-at-a-time analog of BMW's aligned block boundaries):
  1. For each query term t: w_idf(t) = w_q(t)·idf(t); per-block upper bound
-    ub(t, blk) = w_idf(t) · max_score_component(blk) (stored at build time,
-    rounded UP into float32 so it stays a true upper bound).
+    ub(t, blk) = w_idf(t) · max_score_component(blk) (stored at build time
+    by the scorer's own expression, so it is an exact upper bound).
  2. Seed θ: decode the `seed_blocks` highest-ub blocks per term, score
     those docs on their seed contributions; θ = k-th best partial score —
     a lower bound of the true k-th best score.
@@ -30,22 +30,17 @@ set-at-a-time analog of BMW's aligned block boundaries):
     doc-at-a-time counterpart is minCompetitiveScore,
     query/HybridQueryScorer.java:161-171): terms whose global upper
     bounds sum to < θ are NON-ESSENTIAL — no doc can reach θ on them
-    alone, so candidates come from essential postings only. Non-essential
-    (dense head) blocks are decoded but their postings are filtered to
-    the candidate docID set INSIDE the kernel (sorted-array searchsorted
-    against a broadcast), so head-term postings never cross the Arrow hop
-    or the score exchange; when the candidate bound (Σ df of essential
-    terms) exceeds `cand_limit`, the filter goes DISTRIBUTED instead:
-    candidate zones (a DataFrame, never collected) still prune NE blocks,
-    and decoded NE parts are left-semi-joined against the candidate
-    docIDs before the score exchange — the kernel-filter win survives any
-    candidate count, with no driver-side materialization.
+    alone, so candidates come from essential postings only. Candidate
+    zones (a DataFrame, never collected) prune the non-essential (dense
+    head) blocks, and their decoded parts are left-semi-joined against the
+    candidate docIDs before the score exchange, so non-candidate head-term
+    postings never reach the final aggregation.
  6. Exact score = Σ decoded contributions per doc; top-k, ties by docID
     asc (ScoreCombiner.java:37-50 semantics).
 
-Everything is DataFrame dataflow; decoding is a vectorized Arrow pass
-(codec.decode_blocks_batch — one varint sweep per partition, no per-row
-Python). The segment scan prunes by `shard` directory (partition column
+Everything is DataFrame dataflow; decoding is inline(arrays_zip(...)) over
+the block arrays and scoring a Column expression, so no posting leaves the
+JVM. The segment scan prunes by `shard` directory (partition column
 = hash(term) % N_SHARDS) and pushes the term IN-list into parquet row
 groups, so a q-term query touches ≤ q shard directories.
 """
@@ -53,63 +48,22 @@ groups, so a q-term query touches ≤ q shard directories.
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from neural_search_spark import B, K1
-from neural_search_spark.index.codec import decode_blocks_batch
+from neural_search_spark.query.bm25 import bm25_score_col
 from neural_search_spark.session import local_frame
 
-_DECODED_SCHEMA = T.StructType(
-    [
-        T.StructField("docID", T.LongType(), False),
-        T.StructField("part", T.DoubleType(), False),
-    ]
-)
-
-def _decode_and_score(
-    blocks: DataFrame, avgdl: float, k1: float, b: float, cand_bc=None
-) -> DataFrame:
-    """blocks: (term, w_idf, n, docids, tfs, dls) → (docID, part) partial
-    scores, decoded+scored in one vectorized pass per Arrow batch.
-
-    `cand_bc` (optional): a Spark broadcast of a SORTED np.int64 array of
-    candidate docIDs. Postings of other docs are dropped INSIDE the kernel
-    (one vectorized searchsorted per batch) — they never cross the
-    Python→JVM Arrow hop nor enter the score exchange. This is the
-    MAXSCORE non-essential decode path: the blocks still get swept (varint
-    decode is memory-speed), but a dense head term emits only its
-    candidate rows."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cand = cand_bc.value if cand_bc is not None else None
-        for batch in batches:
-            if batch.empty:
-                continue
-            ns = batch["n"].to_numpy(np.int64)
-            block_idx, docids, tfs, dls = decode_blocks_batch(
-                list(batch["docids"]), list(batch["tfs"]), list(batch["dls"]), ns
-            )
-            if cand is not None and len(docids):
-                if len(cand) == 0:
-                    continue
-                pos = np.searchsorted(cand, docids)
-                pos[pos == len(cand)] = 0
-                mask = cand[pos] == docids
-                block_idx, docids = block_idx[mask], docids[mask]
-                tfs, dls = tfs[mask], dls[mask]
-            w_idf = batch["w_idf"].to_numpy(np.float64)[block_idx]
-            tf = tfs.astype(np.float64)
-            dl = dls.astype(np.float64)
-            part = w_idf * (tf / (tf + k1 * (1.0 - b + b * dl / avgdl)))
-            yield pd.DataFrame({"docID": docids.astype(np.int64), "part": part})
-
-    return blocks.mapInPandas(run, schema=_DECODED_SCHEMA)
+def _decode_and_score(blocks: DataFrame, avgdl: float) -> DataFrame:
+    """blocks: (w_idf, docids, tfs, dls) → (docID, part) partial scores:
+    one row per posting, scored by the same expression that built the
+    blocks' max_score_component."""
+    postings = blocks.select("w_idf", F.inline(F.arrays_zip("docids", "tfs", "dls")))
+    return postings.select(
+        F.col("docids").alias("docID"),
+        (F.col("w_idf") * bm25_score_col(F.col("tfs"), F.col("dls"), F.lit(avgdl))).alias("part"),
+    )
 
 
 def wand_topk(
@@ -119,14 +73,11 @@ def wand_topk(
     avgdl: float,
     terms: dict[str, float] | list[str],
     k: int = 10,
-    k1: float = K1,
-    b: float = B,
     prune: bool = True,
     seed_blocks: int = 32,
     zone_width: int = 1024,
     wide_cap: int = 64,
     no_prune_blocks: int = 512,
-    cand_limit: int = 2_000_000,
     stats_out: dict | None = None,
     plan_cache: dict | None = None,
 ) -> DataFrame:
@@ -149,11 +100,9 @@ def wand_topk(
     machinery is skipped entirely and the blocks are decoded outright
     (2 jobs) — pruning a handful of blocks costs more in job latency than
     the decode it saves. When the MAXSCORE split activates (≥1
-    non-essential term) a fourth job materializes the candidate docIDs
-    for the kernel filter (≤ `cand_limit` int64s to the driver; above
-    that the distributed semi-join fallback keeps 3 jobs and never
-    collects candidates). `term_stats` is accepted for API compatibility
-    but never scanned.
+    non-essential term) the candidate filter is a pair of semi-joins in
+    job C; candidates never reach the driver. `term_stats` is accepted for
+    API compatibility but never scanned.
 
     `plan_cache` (optional, from IndexStore.plan_cache()): a per-term
     snapshot of exactly what job A aggregates ({term: {df, nblocks,
@@ -238,9 +187,9 @@ def wand_topk(
         widf_map = F.create_map(*[x for t in sorted(w_idf) for x in (F.lit(t), F.lit(w_idf[t]))])
         scored = _decode_and_score(
             segments.where(F.col("term").isin(sorted(w_idf))).select(
-                "term", widf_map[F.col("term")].alias("w_idf"), "n", "docids", "tfs", "dls"
+                widf_map[F.col("term")].alias("w_idf"), "docids", "tfs", "dls"
             ),
-            avgdl, k1, b,
+            avgdl,
         )
         if stats_out is not None:
             stats_out.update(
@@ -259,7 +208,7 @@ def wand_topk(
         return _ranked(scored.groupBy("docID").agg(F.sum("part").alias("score")), k)
 
     # the prune path reads the block metadata several times: persist only
-    # its columns — the compressed payloads are re-read lazily by whichever
+    # its columns — the posting arrays are re-read lazily by whichever
     # decode actually runs
     qmeta = qmeta.persist()
     try:
@@ -269,8 +218,7 @@ def wand_topk(
             if r["wide_max"] is not None
         }
         # per-term global upper bound UB_t = w_idf·max component over ALL
-        # of t's blocks (MAXSCORE term bound; max_score_component is
-        # rounded UP into float32 at build time, so UB_t is a true bound)
+        # of t's blocks (MAXSCORE term bound)
         ub = {r["term"]: w_idf[r["term"]] * float(r["tmax"]) for r in agg_rows if r["term"] in w_idf}
 
         widf_df = F.broadcast(
@@ -292,7 +240,7 @@ def wand_topk(
         )
         _t0 = _time.time()
         seed_scores = (
-            _decode_and_score(seed_set.select("term", "w_idf", "n", "docids", "tfs", "dls"), avgdl, k1, b)
+            _decode_and_score(seed_set.select("w_idf", "docids", "tfs", "dls"), avgdl)
             .groupBy("docID")
             .agg(F.sum("part").alias("score"))
             .orderBy(F.col("score").desc(), F.col("docID").asc())
@@ -308,9 +256,9 @@ def wand_topk(
         # least one posting of the remaining ESSENTIAL terms. Candidates
         # therefore come from essential postings only; non-essential
         # (typically dense head) terms contribute scores but never
-        # nominate candidates — their postings are filtered to the
-        # candidate set inside the decode kernel, so a head term's
-        # millions of postings never reach the score exchange. This is
+        # nominate candidates — their decoded postings are semi-joined to
+        # the candidate set, so a head term's millions of postings never
+        # reach the score exchange. This is
         # the set-at-a-time MAXSCORE of Turtle & Flood; the reference's
         # doc-at-a-time counterpart is the minCompetitiveScore machinery
         # (query/HybridQueryScorer.java:161-171).
@@ -378,13 +326,8 @@ def wand_topk(
         keep_keys = narrow_keep.unionByName(wide.select("term", "salt", "blockID"))
         decode_set = qblocks.join(keep_keys, ["term", "salt", "blockID"], "left_semi")
 
-        e_parts = _decode_and_score(
-            decode_set.select("term", "w_idf", "n", "docids", "tfs", "dls"), avgdl, k1, b
-        )
-        cand_mode = None
-        n_cand = 0
+        e_parts = _decode_and_score(decode_set.select("w_idf", "docids", "tfs", "dls"), avgdl)
         ne_keys_df = None
-        cand_bc = None
         if not ne_terms:
             total = e_parts.groupBy("docID").agg(F.sum("part").alias("score"))
             _t0 = _time.time()
@@ -393,112 +336,44 @@ def wand_topk(
         else:
             ne_cls = classified.where(F.col("term").isin(ne_terms))
             e_parts = e_parts.persist()
-            _t0 = _time.time()
-            # Σ df over essential terms bounds the candidate count without
-            # a Spark job; only below `cand_limit` do candidate docIDs come
-            # to the driver (≤ cand_limit int64s) for the kernel filter
-            cand_bound = sum(dfs[t] for t in e_terms)
             try:
-                if cand_bound <= cand_limit:
-                    cand_mode = "kernel"
-                    cand_ids = np.unique(
-                        e_parts.select("docID").toPandas()["docID"].to_numpy(np.int64)
+                # (a) NE narrow blocks are zone-pruned: candidate zones come
+                # from e_parts as a DataFrame (≤ docID-space/zone_width rows,
+                # tiny even at 10^12 docs) via left-semi, never collected;
+                # (b) candidacy is enforced by left-semi-joining decoded NE
+                # parts against the candidate docIDs BEFORE the score
+                # exchange (AQE picks broadcast vs shuffle-hash for the semi
+                # joins by runtime size). A doc is a candidate iff it carries
+                # ≥1 essential posting.
+                cand_zones_df = e_parts.select(
+                    (F.col("docID") / zone_width).cast("long").alias("zone")
+                ).distinct()
+                ne_narrow_keep = (
+                    ne_cls.where(~F.col("_wide"))
+                    .select(
+                        "term", "salt", "blockID",
+                        F.explode(F.sequence("_zlo", "_zhi")).alias("zone"),
                     )
-                    n_cand = int(len(cand_ids))
-                    cand_bc = spark.sparkContext.broadcast(cand_ids)
-                    phases["cand_collect"] = round(_time.time() - _t0, 3)
-                    # narrow NE blocks overlapping no candidate zone are
-                    # never decoded; surviving ones are swept but emit only
-                    # candidate postings (kernel searchsorted filter)
-                    cand_zones = np.unique(cand_ids // zone_width)
-                    # pandas → Arrow path: a list-of-tuples createDataFrame
-                    # would pickle-serialize up to cand_limit rows
-                    zones_df = F.broadcast(
-                        spark.createDataFrame(
-                            pd.DataFrame({"zone": cand_zones.astype(np.int64)})
-                        )
-                    )
-                    ne_narrow_keep = (
-                        ne_cls.where(~F.col("_wide"))
-                        .select(
-                            "term", "salt", "blockID",
-                            F.explode(F.sequence("_zlo", "_zhi")).alias("zone"),
-                        )
-                        .join(zones_df, "zone", "left_semi")
-                        .select("term", "salt", "blockID")
-                        .distinct()
-                    )
-                    ne_keys = ne_narrow_keep.unionByName(
-                        ne_cls.where(F.col("_wide")).select("term", "salt", "blockID")
-                    )
-                    ne_keys_df = ne_keys
-                    ne_decode = qblocks.join(ne_keys, ["term", "salt", "blockID"], "left_semi")
-                    ne_parts = _decode_and_score(
-                        ne_decode.select("term", "w_idf", "n", "docids", "tfs", "dls"),
-                        avgdl, k1, b, cand_bc=cand_bc,
-                    )
-                    # every NE row is a candidate; every output doc carries
-                    # ≥1 essential part, so candidacy needs no flag
-                    total = (
-                        e_parts.unionByName(ne_parts)
-                        .groupBy("docID")
-                        .agg(F.sum("part").alias("score"))
-                    )
-                else:
-                    # Candidate set too large for a driver-side broadcast:
-                    # stay fully DISTRIBUTED. (a) NE narrow blocks are still
-                    # zone-pruned — candidate zones come from e_parts as a
-                    # DataFrame (≤ docID-space/zone_width rows, tiny even at
-                    # 10^12 docs) via left-semi, never collected; (b)
-                    # candidacy is enforced by left-semi-joining decoded NE
-                    # parts against the candidate docIDs BEFORE the score
-                    # exchange, so non-candidate head-term postings never
-                    # enter the final aggregation (AQE picks broadcast vs
-                    # shuffle-hash for the semi joins by runtime size).
-                    # Results are identical to the kernel path: a doc is a
-                    # candidate iff it carries ≥1 essential posting.
-                    cand_mode = "semijoin"
-                    cand_zones_df = e_parts.select(
-                        (F.col("docID") / zone_width).cast("long").alias("zone")
-                    ).distinct()
-                    ne_narrow_keep = (
-                        ne_cls.where(~F.col("_wide"))
-                        .select(
-                            "term", "salt", "blockID",
-                            F.explode(F.sequence("_zlo", "_zhi")).alias("zone"),
-                        )
-                        .join(cand_zones_df, "zone", "left_semi")
-                        .select("term", "salt", "blockID")
-                        .distinct()
-                    )
-                    ne_keys_df = ne_narrow_keep.unionByName(
-                        ne_cls.where(F.col("_wide")).select("term", "salt", "blockID")
-                    )
-                    ne_decode = qblocks.join(
-                        ne_keys_df, ["term", "salt", "blockID"], "left_semi"
-                    )
-                    ne_parts = _decode_and_score(
-                        ne_decode.select("term", "w_idf", "n", "docids", "tfs", "dls"),
-                        avgdl, k1, b,
-                    )
-                    ne_kept = ne_parts.join(
-                        e_parts.select("docID").distinct(), "docID", "left_semi"
-                    )
-                    total = (
-                        e_parts.unionByName(ne_kept)
-                        .groupBy("docID")
-                        .agg(F.sum("part").alias("score"))
-                    )
+                    .join(cand_zones_df, "zone", "left_semi")
+                    .select("term", "salt", "blockID")
+                    .distinct()
+                )
+                ne_keys_df = ne_narrow_keep.unionByName(
+                    ne_cls.where(F.col("_wide")).select("term", "salt", "blockID")
+                )
+                ne_decode = qblocks.join(ne_keys_df, ["term", "salt", "blockID"], "left_semi")
+                ne_parts = _decode_and_score(ne_decode.select("w_idf", "docids", "tfs", "dls"), avgdl)
+                ne_kept = ne_parts.join(e_parts.select("docID").distinct(), "docID", "left_semi")
+                total = (
+                    e_parts.unionByName(ne_kept)
+                    .groupBy("docID")
+                    .agg(F.sum("part").alias("score"))
+                )
                 _t0 = _time.time()
                 rows = _ranked(total, k).collect()
                 phases["prune_decode_score"] = round(_time.time() - _t0, 3)
             finally:
                 e_parts.unpersist()
-                if cand_bc is not None:
-                    # the kernel broadcast is dead once rows are collected;
-                    # without this, executor+driver copies accrue across
-                    # queries in a long-lived session (ADVICE r3)
-                    cand_bc.destroy()
         if stats_out is not None:
             _t0 = _time.time()
             n_zones = zstats.count()
@@ -519,8 +394,6 @@ def wand_topk(
                     "essential_terms": e_terms,
                     "nonessential_terms": ne_terms,
                     "ne_ub_sum": cum_ne,
-                    "cand_mode": cand_mode,
-                    "cand_count": n_cand,
                     # kept for older callers: the zone design has no rescue
                     "blocks_rescued": 0,
                     "rescue_candidates": 0,

@@ -12,7 +12,7 @@ the background. This module is the Spark-idiomatic equivalent:
   previous batch (arrival-order docIDs — Lucene semantics; WITHIN a batch
   docIDs follow stable (conv_id, turn_idx) order via the keys-first
   prefix-sum, so replays of the same batch are deterministic);
-- the batch builds its own compressed segment run (the full salted/
+- the batch builds its own segment run (the full salted/
   block-max build) plus postings/doclens run files, all under
   `runs/batch=<id>/` — runs therefore cover disjoint docID ranges by
   construction, exactly the `merge_segments(mode='append')` contract;
@@ -48,7 +48,7 @@ from neural_search_spark.index.build import (
     build_postings,
     build_term_stats,
 )
-from neural_search_spark.index.segments import build_segments, merge_segments
+from neural_search_spark.index.segments import build_segments, merge_segments, write_segments
 
 
 class StreamingIndexer:
@@ -119,8 +119,6 @@ class StreamingIndexer:
             block_size=self.block_size,
             postings_per_salt=self.postings_per_salt,
         )
-        from neural_search_spark.index.segments import write_segments
-
         write_segments(segs, os.path.join(run_dir, "segments"))
 
     def sink(self, stream_df: DataFrame, checkpoint: str, **trigger_kwargs):
@@ -174,8 +172,8 @@ class StreamingIndexer:
     def compact(self, out: str | None = None) -> str:
         """Merge every run's segments into one table with block maxima
         recomputed under the GLOBAL avgdl (rebuild mode — decode, re-salt,
-        re-encode, like a Lucene segment merge rewrites). Each run was
-        encoded with its own avgdl, so an append-mode union would leave
+        rebuild, like a Lucene segment merge rewrites). Each run was
+        built with its own avgdl, so an append-mode union would leave
         block-max bounds inconsistent with global-stats scoring (unsound
         WAND pruning); the cheap append merge is reserved for runs built
         with shared stats (index/store.py incremental case). Returns the

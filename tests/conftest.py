@@ -35,3 +35,29 @@ def engine(transcripts, index_tables):
     from neural_search_spark.query.dsl import QueryEngine
 
     return QueryEngine(tables=index_tables, docs=transcripts)
+
+
+PYTHON_OPERATORS = ("MapInPandas", "MapInArrow", "ArrowEvalPython", "BatchEvalPython")
+
+
+@pytest.fixture(scope="session")
+def python_operators(spark):
+    """fn → the Python-eval operators (PYTHON_OPERATORS) named in the
+    executed physical plans of every SQL execution `fn` runs, read from
+    the SQL status store."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    status = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        bus.waitUntilEmpty(30_000)
+        xs = status.executionsList()
+        return [xs.apply(i) for i in range(xs.size())]
+
+    def run(fn) -> set[str]:
+        seen = {x.executionId() for x in executions()}
+        fn()
+        new = [x for x in executions() if x.executionId() not in seen]
+        assert new, "fn ran no SQL execution"
+        return {op for x in new for op in PYTHON_OPERATORS if op in x.physicalPlanDescription()}
+
+    return run

@@ -72,6 +72,17 @@ def test_dsl_never_leaks_raw_errors(fuzz_engine):
     # validation error; raw leaks indicate missing parse guards
     assert not leaks, leaks[:5]
 
+    # values that fail int()/float() parsing: a raw ValueError is a leak too
+    for q in (
+        {"match": {"text": {"query": "alpha", "boost": "x"}}},
+        {"match": {"text": {"query": "alpha", "minimum_should_match": "75%"}}},
+        {"term": {"text": {"value": "alpha", "boost": "x"}}},
+    ):
+        with pytest.raises(QueryValidationError):
+            fuzz_engine.search(q, k=3).collect()
+        with pytest.raises(QueryValidationError):
+            fuzz_engine.msearch([q], k=3).collect()
+
 
 def test_top_hits_score_decimals_validated(fuzz_engine):
     q = {"match": {"text": "alpha"}}

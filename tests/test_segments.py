@@ -6,7 +6,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from neural_search_spark.index.codec import decode_blocks_batch, encode_docids, varint_encode
 from neural_search_spark.index.segments import BLOCK_SIZE, build_segments
 from neural_search_spark.index.store import IndexStore, build_index
 from neural_search_spark.query.bm25 import bm25_topk
@@ -35,46 +34,21 @@ def segments(spark, index_tables, pdl):
     return seg
 
 
-def test_decode_blocks_batch_roundtrip():
-    rng = np.random.RandomState(7)
-    blocks = []
-    for _ in range(20):
-        n = rng.randint(1, 40)
-        ids = np.sort(rng.choice(10_000, size=n, replace=False)).astype(np.uint64)
-        tf = rng.randint(1, 9, size=n).astype(np.uint64)
-        dl = rng.randint(5, 300, size=n).astype(np.uint64)
-        blocks.append((ids, tf, dl))
-    bidx, ids, tfs, dls = decode_blocks_batch(
-        [encode_docids(b[0]) for b in blocks],
-        [varint_encode(b[1]) for b in blocks],
-        [varint_encode(b[2]) for b in blocks],
-        np.array([len(b[0]) for b in blocks]),
-    )
-    off = 0
-    for i, (eids, etf, edl) in enumerate(blocks):
-        n = len(eids)
-        assert (bidx[off : off + n] == i).all()
-        assert ids[off : off + n].tolist() == eids.tolist()
-        assert tfs[off : off + n].tolist() == etf.tolist()
-        assert dls[off : off + n].tolist() == edl.tolist()
-        off += n
-
-
 def test_segment_invariants(segments, index_tables):
     rows = segments.collect()
     assert rows, "no segments built"
     # every block: strictly increasing docIDs, max_score_component correct
     m = index_tables.meta.first()
     avgdl = float(m["avgdl"])
-    from neural_search_spark.index.codec import decode_docids, varint_decode
 
     salted = set()
     for r in rows:
-        ids = decode_docids(r["docids"], r["n"])
-        assert (np.diff(ids.astype(np.int64)) > 0).all() if len(ids) > 1 else True
+        ids = np.array(r["docids"], dtype=np.int64)
+        assert len(ids) == len(r["tfs"]) == len(r["dls"]) == r["n"]
+        assert (np.diff(ids) > 0).all() if len(ids) > 1 else True
         assert ids[0] == r["first_docID"] and ids[-1] == r["last_docID"]
-        tf = varint_decode(r["tfs"], r["n"]).astype(np.float64)
-        dl = varint_decode(r["dls"], r["n"]).astype(np.float64)
+        tf = np.array(r["tfs"], dtype=np.float64)
+        dl = np.array(r["dls"], dtype=np.float64)
         comp = tf / (tf + 1.2 * (1 - 0.75 + 0.75 * dl / avgdl))
         assert abs(comp.max() - r["max_score_component"]) < 1e-6
         assert r["n"] <= 16
@@ -156,14 +130,14 @@ def test_store_build_and_resume(spark, tmp_path):
 
     seg_manifest = os.path.join(out, "_manifests", "segments.json")
     before = sorted(
-        (r["term"], r["salt"], r["blockID"], bytes(r["docids"]).hex())
+        (r["term"], r["salt"], r["blockID"], tuple(r["docids"]))
         for r in store.segments.collect()
     )
     os.remove(seg_manifest)
     r3 = build_index(spark, tr, out, source_fingerprint="synth:15x8:42", postings_per_salt=50)
     assert [s.skipped for s in r3] == [True, True, True, True, False]
     after = sorted(
-        (r["term"], r["salt"], r["blockID"], bytes(r["docids"]).hex())
+        (r["term"], r["salt"], r["blockID"], tuple(r["docids"]))
         for r in IndexStore(spark, out).segments.collect()
     )
     assert before == after
@@ -220,9 +194,11 @@ def test_xxhash64_py_matches_spark(spark):
         assert shard_of(r["t"]) == r["s"], r["t"]
 
 
-def test_store_topk_auto_strategy(spark, tmp_path):
+def test_store_topk_auto_strategy(spark, tmp_path, python_operators):
     """strategy='auto' must return the same ranking as both forced paths,
-    and pick the segment path for rare terms / relational for head terms."""
+    and pick the segment path for rare terms / relational for head terms.
+    The segment reads, early exit and pruned alike, run no Python
+    operator."""
     from neural_search_spark.data import synthesize_transcripts
     from neural_search_spark.index.store import IndexStore, build_index
 
@@ -254,6 +230,14 @@ def test_store_topk_auto_strategy(spark, tmp_path):
     assert so.get("plan_cache_hit") is True  # wand skipped job A
     assert [(r["docID"], round(r["score"], 9)) for r in got] == rows_ref(store, ["tok5"])
 
+    from neural_search_spark.query.segment_search import wand_topk as _wand
+
+    assert python_operators(lambda: store.topk(["tok5"], k=5).collect()) == set()
+    assert python_operators(lambda: _wand(
+        store.segments, store.term_stats, store.meta["N"], store.meta["avgdl"],
+        {"the": 1.0, "a": 1.0, "tok5": 8.0}, k=5, zone_width=32, no_prune_blocks=0,
+    ).collect()) == set()
+
     # invalidation: a delete changes the epoch → cache rebuilt
     victim = got[0]["docID"]
     store.delete_docs([victim])
@@ -269,45 +253,34 @@ def rows_ref(store, terms):
 def test_wand_maxscore_split_kernel_and_semijoin(spark, transcripts, index_tables, segments):
     """A query mixing dense head terms with an upweighted rare term must
     activate the MAXSCORE essential/non-essential split (the heads' summed
-    upper bounds fall below θ), stay rank- and score-identical to both the
-    unpruned decode and the brute-force oracle on BOTH non-essential
-    handling paths — the kernel docID filter (candidate set fits the
-    driver broadcast) AND the distributed semi-join fallback (cand_limit=0
-    forces the >cand_limit regime, where candidates are never collected)
-    — and decode fewer non-essential blocks than the full query would."""
+    upper bounds fall below θ), and its semi-join candidate filter must stay
+    rank- and score-identical to both the unpruned decode and the
+    brute-force oracle, decoding only zone-pruned non-essential blocks."""
     m = index_tables.meta.first()
     docs = {r["docID"]: r["text"] for r in transcripts.select("docID", "text").collect()}
     # heavy weight on the rare term drives θ far above the heads' UBs
     terms = {"the": 1.0, "a": 1.0, "tok5": 8.0}
     exp = oracle.topk(oracle.bm25_scores(docs, terms), 5)
 
-    results = {}
-    for mode, limit in (("kernel", 2_000_000), ("semijoin", 0)):
-        stats: dict = {}
-        got = wand_topk(
-            segments, index_tables.term_stats, int(m["N"]), float(m["avgdl"]),
-            terms, k=5, zone_width=32, no_prune_blocks=0, cand_limit=limit,
-            stats_out=stats,
-        ).collect()
-        assert stats["nonessential_terms"], f"split did not activate ({mode}): {stats}"
-        assert stats["cand_mode"] == mode, stats
-        assert "tok5" in stats["essential_terms"], stats
-        results[mode] = [(r["docID"], round(r["score"], 9)) for r in got]
-        assert [r["docID"] for r in got] == [d for d, _ in exp], mode
-        for r, (_, s) in zip(got, exp):
-            assert r["score"] == pytest.approx(s, rel=1e-9), mode
-        if mode == "kernel":
-            assert stats["cand_count"] > 0
-        else:
-            # the distributed path still zone-prunes NE blocks
-            assert stats["blocks_ne_decoded"] >= 0
-    assert results["kernel"] == results["semijoin"]
+    stats: dict = {}
+    got = wand_topk(
+        segments, index_tables.term_stats, int(m["N"]), float(m["avgdl"]),
+        terms, k=5, zone_width=32, no_prune_blocks=0, stats_out=stats,
+    ).collect()
+    assert stats["nonessential_terms"], f"split did not activate: {stats}"
+    assert "tok5" in stats["essential_terms"], stats
+    assert [r["docID"] for r in got] == [d for d, _ in exp]
+    for r, (_, s) in zip(got, exp):
+        assert r["score"] == pytest.approx(s, rel=1e-9)
+    assert 0 <= stats["blocks_ne_decoded"] <= stats["blocks_total"] - stats["blocks_essential"]
 
     unpruned = wand_topk(
         segments, index_tables.term_stats, int(m["N"]), float(m["avgdl"]),
         terms, k=5, prune=False,
     ).collect()
-    assert results["kernel"] == [(r["docID"], round(r["score"], 9)) for r in unpruned]
+    assert [(r["docID"], round(r["score"], 9)) for r in got] == [
+        (r["docID"], round(r["score"], 9)) for r in unpruned
+    ]
 
 
 from hypothesis import given, settings
