@@ -118,27 +118,3 @@ def assign_doc_ids(
         ranged.unpersist()
     return out
 
-
-def assign_doc_ids_to_parquet(
-    df: DataFrame,
-    out_path: str,
-    order_cols: list[str] | None = None,
-    num_partitions: int | None = None,
-    id_col: str = "docID",
-    method: str = "keys",
-) -> None:
-    """Pipeline variant: stream the docID-stamped rows straight to parquet
-    (the stage checkpoint) — the write IS the consistency barrier the
-    two-pass scheme needs. With method='keys' the only full-row pass is
-    the mapping join feeding the writer."""
-    order_cols = order_cols or ["conv_id", "turn_idx"]
-    num_partitions = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    if method == "keys":
-        mapping = _key_mapping(df, order_cols, num_partitions, id_col)
-        _mapping_join(df, mapping, order_cols).write.mode("overwrite").parquet(out_path)
-        return
-    ranged = _ranged(df, order_cols, num_partitions)
-    try:
-        _with_doc_ids(ranged, order_cols, id_col).write.mode("overwrite").parquet(out_path)
-    finally:
-        ranged.unpersist()

@@ -28,7 +28,8 @@ The arrays are Spark's own columnar layout, built and read only by Spark
 expressions (collect_list at build, inline(arrays_zip(...)) at query and
 merge time), so no posting crosses into Python. write_segments stores them
 with parquet's v2 writer and no dictionary, which delta-encodes the sorted
-docID lists (DELTA_BINARY_PACKED).
+docID lists (DELTA_BINARY_PACKED), and compresses the pages with zstd, like
+every other index file (write_stage).
 
 Skew handling (the reference shards by document and never partitions by term
 — term skew is specific to our term-major layout): head terms whose df
@@ -183,25 +184,47 @@ def build_segments(
     )
 
 
+#: every parquet file of an index is written zstd. Parquet records the codec
+#: per column chunk, so an index or a resumed build written with another
+#: codec stays readable. Set per write, not per session, so user-data
+#: writers keep their own codec
+_STAGE_OPTIONS = {"compression": "zstd"}
+
 #: v2 pages with no dictionary delta-encode the sorted docID lists; with
 #: parquet's defaults (v1 pages, dictionary on) the segments of a 10k-turn
-#: index take 1.7x the bytes, and the whole index 25% more
-_PARQUET_OPTIONS = {"parquet.writer.version": "v2", "parquet.enable.dictionary": "false"}
+#: index take 1.7x the bytes, and the whole index 25% more (measured with
+#: snappy pages)
+_SEGMENT_OPTIONS = {"parquet.writer.version": "v2", "parquet.enable.dictionary": "false"}
+
+
+def write_stage(
+    df: DataFrame,
+    path: str,
+    mode: str = "overwrite",
+    partition_by: str | None = None,
+    options: dict | None = None,
+) -> None:
+    """The one parquet writer of every index file: build stages, compact
+    rewrites, tombstones, streaming runs and segment merges."""
+    w = df.write.mode(mode).options(**_STAGE_OPTIONS, **(options or {}))
+    if partition_by is not None:
+        w = w.partitionBy(partition_by)
+    w.parquet(path)
 
 
 def write_segments(segments: DataFrame, path: str) -> None:
     """The one segment writer. Sharded posting files: directory-partitioned
     by shard(term) so a query touching m terms scans at most m shard
     directories (partition pruning), with term-level row-group skipping
-    inside via min/max stats."""
-    (
+    inside via min/max stats. Written through write_stage (zstd) with v2
+    pages and no dictionary on top."""
+    write_stage(
         segments.withColumn("shard", shard_col(F.col("term")))
         .repartition("shard")
-        .sortWithinPartitions("term", "salt", "blockID")
-        .write.mode("overwrite")
-        .options(**_PARQUET_OPTIONS)
-        .partitionBy("shard")
-        .parquet(path)
+        .sortWithinPartitions("term", "salt", "blockID"),
+        path,
+        partition_by="shard",
+        options=_SEGMENT_OPTIONS,
     )
 
 

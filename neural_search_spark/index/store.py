@@ -1,13 +1,15 @@
 """Persistent sharded index store: staged build with per-stage lineage
 manifests and checkpoint-resume.
 
-Layout under `out_dir/`:
+Layout under `out_dir/`, every parquet file zstd-compressed (one writer,
+index/segments.py write_stage):
     docs/           parquet — transcripts + stable docID (fetch-phase source)
     postings/       parquet — (term, docID, tf, dl)
     doclens/        parquet — (docID, dl)
-    term_stats/     parquet — (term, df) exact
+    term_stats/     parquet — (term, df) exact, each file sorted by term
     segments/       parquet, dir-partitioned by shard — posting blocks with
                     docids/tfs/dls array columns (index/segments.py)
+    tombstones/     parquet — (docID) of deleted docs, until compact()
     meta.json       {N, avgdl, tokenizer_hash, codec_version, source_fingerprint}
     _manifests/{stage}.json
 
@@ -42,29 +44,25 @@ from neural_search_spark.index.build import (
     build_postings,
     build_term_stats,
 )
-from neural_search_spark.index.segments import CODEC_VERSION, build_segments, write_segments
+from neural_search_spark.index.segments import (
+    CODEC_VERSION,
+    build_segments,
+    write_segments,
+    write_stage,
+)
 from neural_search_spark.session import local_frame
 
 STAGES = ["docs", "postings", "doclens", "term_stats", "segments"]
 
 
-def _count_and_checksum(df: DataFrame) -> tuple[int, str]:
-    """Order-insensitive content checksum + row count in ONE job: sum of
-    per-row xxhash64 over all columns (internal lineage only — not an
-    engine-parity surface)."""
-    cols = [F.col(c).cast("string") for c in df.columns]
-    row = df.agg(
-        F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("h"),  # no long overflow (ANSI)
-        F.count("*").alias("n"),
-    ).first()
-    return int(row["n"]), f"{row['h']}:{row['n']}"
+def _clustered_term_stats(postings: DataFrame) -> DataFrame:
+    """term_stats sorted by term within each file, with no shuffle: the
+    row-group min/max stats then skip row groups on `term IN (…)`, and the
+    sorted strings compress better."""
+    return build_term_stats(postings).sortWithinPartitions("term")
 
 
-def _write_parquet(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").parquet(path)
-
-
-def _write_with_metrics(df: DataFrame, path: str, write=_write_parquet) -> tuple[int, str]:
+def _write_with_metrics(df: DataFrame, path: str, write=write_stage) -> tuple[int, str]:
     """Write a stage's parquet with `write(df, path)` and collect its
     lineage metrics (row count + order-insensitive checksum) IN the write
     job via `observe` — no second read-back pass per stage. The per-stage
@@ -76,7 +74,7 @@ def _write_with_metrics(df: DataFrame, path: str, write=_write_parquet) -> tuple
     obs = Observation()
     observed = df.observe(
         obs,
-        F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("h"),
+        F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("h"),  # no long overflow (ANSI)
         F.count(F.lit(1)).alias("n"),
     )
     write(observed, path)
@@ -101,11 +99,11 @@ class IndexStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
-        with open(os.path.join(path, "meta.json")) as f:
-            self.meta = json.load(f)
         self._plan_cache: dict | None = None
         self._handles: dict[str, DataFrame] = {}
         self._handles_epoch: tuple | None = None
+        self._meta: dict = {}
+        self._sync()
 
     def _epoch(self) -> tuple:
         """Cheap invalidation key for the plan cache and the parquet
@@ -125,6 +123,24 @@ class IndexStore:
         entries.append(("meta.json", st.st_mtime_ns, st.st_size))
         return tuple(entries)
 
+    def _sync(self) -> tuple:
+        """The current _epoch(). When it moved (this or another store
+        rebuilt, deleted or compacted), drop the parquet handles and reload
+        meta.json, so N/avgdl always belong to the files being read."""
+        epoch = self._epoch()
+        if epoch != self._handles_epoch:
+            self._handles, self._handles_epoch = {}, epoch
+            with open(os.path.join(self.path, "meta.json")) as f:
+                self._meta = json.load(f)
+        return epoch
+
+    @property
+    def meta(self) -> dict:
+        """meta.json of the current epoch: {N, avgdl, tokenizer_hash,
+        codec_version, source_fingerprint}."""
+        self._sync()
+        return self._meta
+
     def plan_cache(self, zone_width: int = 1024, wide_cap: int = 64) -> dict | None:
         """Session-cached per-term block-metadata aggregate — exactly what
         segment_search.wand_topk's "job A" computes per query, built ONCE
@@ -135,7 +151,7 @@ class IndexStore:
         right cache is the per-query filtered aggregate (bounded by |q|),
         not a driver dict.
         """
-        epoch = self._epoch()
+        epoch = self._sync()
         c = self._plan_cache
         if (
             c is not None
@@ -144,17 +160,12 @@ class IndexStore:
             and c["wide_cap"] == wide_cap
         ):
             return c if c.get("terms") is not None else None
-        n_terms = self.term_stats.count()
-        if n_terms > self.PLAN_CACHE_MAX_TERMS:
-            self._plan_cache = {
-                "epoch": epoch, "zone_width": zone_width,
-                "wide_cap": wide_cap, "terms": None,
-            }
-            return None
         zlo = (F.col("first_docID") / zone_width).cast("long")
         zhi = (F.col("last_docID") / zone_width).cast("long")
         wide = (zhi - zlo) >= wide_cap
-        rows = (
+        # one Arrow collect, capped one row past the bound: the cap both
+        # detects an oversized vocabulary and keeps it off the driver
+        agg = (
             self.segments.groupBy("term")
             .agg(
                 F.sum("n").alias("df"),
@@ -163,24 +174,16 @@ class IndexStore:
                 F.max(F.when(wide, F.col("max_score_component"))).alias("wide_max"),
                 F.max("max_score_component").alias("tmax"),
             )
-            .collect()
+            .limit(self.PLAN_CACHE_MAX_TERMS + 1)
+            .toArrow()
         )
+        terms = None
+        if agg.num_rows <= self.PLAN_CACHE_MAX_TERMS:
+            terms = {r.pop("term"): r for r in agg.to_pylist()}
         self._plan_cache = {
-            "epoch": epoch,
-            "zone_width": zone_width,
-            "wide_cap": wide_cap,
-            "terms": {
-                r["term"]: {
-                    "df": int(r["df"]),
-                    "nblocks": int(r["nblocks"]),
-                    "nwide": int(r["nwide"]),
-                    "wide_max": r["wide_max"],
-                    "tmax": r["tmax"],
-                }
-                for r in rows
-            },
+            "epoch": epoch, "zone_width": zone_width, "wide_cap": wide_cap, "terms": terms,
         }
-        return self._plan_cache
+        return self._plan_cache if terms is not None else None
 
     # --- open-time accessors (lazy scans; segments scan prunes by shard) --
     def _table(self, stage: str) -> DataFrame:
@@ -189,9 +192,7 @@ class IndexStore:
         the stage's files; a handle keeps both, so it is only valid while
         the files it listed exist — compact() drops the handles on every
         stage swap, before the epoch moves."""
-        epoch = self._epoch()
-        if epoch != self._handles_epoch:
-            self._handles, self._handles_epoch = {}, epoch
+        self._sync()
         h = self._handles.get(stage)
         if h is None:
             h = self._handles[stage] = self.spark.read.parquet(os.path.join(self.path, stage))
@@ -259,7 +260,7 @@ class IndexStore:
             new = new.join(prev, "docID", "left_anti")
         n_new = new.count()
         if n_new:
-            new.coalesce(1).write.mode("append").parquet(self._tombstone_path)
+            write_stage(new.coalesce(1), self._tombstone_path, mode="append")
         return n_new
 
     def compact(self) -> dict:
@@ -281,7 +282,7 @@ class IndexStore:
         tombs = tombs.persist()
         n_del = tombs.count()
 
-        def swap(stage: str, df: DataFrame, write=_write_parquet):
+        def swap(stage: str, df: DataFrame, write=write_stage):
             tmp = os.path.join(self.path, f"{stage}__compact")
             write(df, tmp)
             old = os.path.join(self.path, stage)
@@ -295,7 +296,7 @@ class IndexStore:
         swap("postings", live_postings)
         postings = self.postings  # re-scan the rewritten parquet
         swap("doclens", self.doclens.join(tombs, "docID", "left_anti"))
-        swap("term_stats", build_term_stats(postings))
+        swap("term_stats", _clustered_term_stats(postings))
         swap("docs", self.docs.join(tombs, "docID", "left_anti"))
         doclens = self.doclens
         m = doclens.agg(F.count("*").alias("N"), F.avg("dl").alias("avgdl")).first()
@@ -305,9 +306,7 @@ class IndexStore:
             pdl, avgdl=avgdl, max_doc_id=max(n_docs - 1, 0), term_stats=self.term_stats
         )
         swap("segments", segs, write_segments)
-        self.meta.update({"N": n_docs, "avgdl": avgdl})
-        with open(os.path.join(self.path, "meta.json"), "w") as f:
-            json.dump(self.meta, f, indent=2, sort_keys=True)
+        _write_json(os.path.join(self.path, "meta.json"), dict(self.meta, N=n_docs, avgdl=avgdl))
         shutil.rmtree(self._tombstone_path, ignore_errors=True)
         shutil.rmtree(os.path.join(self.path, "_manifests"), ignore_errors=True)
         tombs.unpersist()
@@ -417,7 +416,7 @@ class IndexStore:
             )
         return wand_topk(
             self.segments,
-            self.term_stats,
+            None,  # never scanned: opening it would cost a schema job
             n_docs=self.meta["N"],
             avgdl=self.meta["avgdl"],
             terms=terms,
@@ -626,12 +625,18 @@ def _read_manifest(out_dir: str, stage: str) -> dict | None:
         return json.load(f)
 
 
-def _write_manifest(out_dir: str, stage: str, payload: dict) -> None:
-    os.makedirs(os.path.join(out_dir, "_manifests"), exist_ok=True)
-    tmp = _manifest_path(out_dir, stage) + ".tmp"
+def _write_json(path: str, payload: dict) -> None:
+    """Replace `path` atomically: a store that reads it as its epoch moves
+    never sees it half-written."""
+    tmp = path + ".tmp"
     with open(tmp, "w") as f:
         json.dump(payload, f, indent=2, sort_keys=True)
-    os.replace(tmp, _manifest_path(out_dir, stage))  # atomic commit
+    os.replace(tmp, path)
+
+
+def _write_manifest(out_dir: str, stage: str, payload: dict) -> None:
+    os.makedirs(os.path.join(out_dir, "_manifests"), exist_ok=True)
+    _write_json(_manifest_path(out_dir, stage), payload)
 
 
 def build_index(
@@ -707,7 +712,7 @@ def build_index(
         return _write_with_metrics(build_doclens_from_postings(postings, docs=docs), out_path)
 
     def produce_term_stats(out_path: str):
-        return _write_with_metrics(build_term_stats(postings), out_path)
+        return _write_with_metrics(_clustered_term_stats(postings), out_path)
 
     # doclens and term_stats both derive from the postings parquet only —
     # submit their Spark jobs from two threads so the scheduler overlaps
@@ -741,17 +746,14 @@ def build_index(
     r, _ = run_stage("segments", produce_segments, [c_docs, c_post, c_dl, c_ts])
     results.append(r)
 
-    with open(os.path.join(out_dir, "meta.json"), "w") as f:
-        json.dump(
-            {
-                "N": n_docs,
-                "avgdl": avgdl,
-                "tokenizer_hash": tokenizer_hash(),
-                "codec_version": CODEC_VERSION,
-                "source_fingerprint": source_fingerprint,
-            },
-            f,
-            indent=2,
-            sort_keys=True,
-        )
+    _write_json(
+        os.path.join(out_dir, "meta.json"),
+        {
+            "N": n_docs,
+            "avgdl": avgdl,
+            "tokenizer_hash": tokenizer_hash(),
+            "codec_version": CODEC_VERSION,
+            "source_fingerprint": source_fingerprint,
+        },
+    )
     return results

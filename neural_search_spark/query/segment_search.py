@@ -68,7 +68,7 @@ def _decode_and_score(blocks: DataFrame, avgdl: float) -> DataFrame:
 
 def wand_topk(
     segments: DataFrame,
-    term_stats: DataFrame,
+    term_stats: DataFrame | None,
     n_docs: int,
     avgdl: float,
     terms: dict[str, float] | list[str],
@@ -102,7 +102,7 @@ def wand_topk(
     the decode it saves. When the MAXSCORE split activates (≥1
     non-essential term) the candidate filter is a pair of semi-joins in
     job C; candidates never reach the driver. `term_stats` is accepted for
-    API compatibility but never scanned.
+    API compatibility but never scanned; None is fine.
 
     `plan_cache` (optional, from IndexStore.plan_cache()): a per-term
     snapshot of exactly what job A aggregates ({term: {df, nblocks,

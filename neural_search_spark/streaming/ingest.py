@@ -48,7 +48,12 @@ from neural_search_spark.index.build import (
     build_postings,
     build_term_stats,
 )
-from neural_search_spark.index.segments import build_segments, merge_segments, write_segments
+from neural_search_spark.index.segments import (
+    build_segments,
+    merge_segments,
+    write_segments,
+    write_stage,
+)
 
 
 class StreamingIndexer:
@@ -103,13 +108,13 @@ class StreamingIndexer:
         docs = assign_doc_ids(batch_df).withColumn(
             "docID", (F.col("docID") + F.lit(base)).cast("long")
         )
-        docs.write.mode("overwrite").parquet(os.path.join(run_dir, "docs"))
+        write_stage(docs, os.path.join(run_dir, "docs"))
         docs = self.spark.read.parquet(os.path.join(run_dir, "docs"))
         postings = build_postings(docs)
-        postings.write.mode("overwrite").parquet(os.path.join(run_dir, "postings"))
+        write_stage(postings, os.path.join(run_dir, "postings"))
         postings = self.spark.read.parquet(os.path.join(run_dir, "postings"))
         doclens = build_doclens_from_postings(postings, docs=docs)
-        doclens.write.mode("overwrite").parquet(os.path.join(run_dir, "doclens"))
+        write_stage(doclens, os.path.join(run_dir, "doclens"))
         doclens = self.spark.read.parquet(os.path.join(run_dir, "doclens"))
         avgdl = float(doclens.agg(F.avg("dl")).first()[0])
         segs = build_segments(

@@ -121,3 +121,20 @@ def test_store_query_engine_bridge(spark, tmp_path):
         {"match": {"text": "data"}}, {"by_role": {"terms": {"field": "role"}}}
     )
     assert aggs["by_role"].count() > 0
+
+
+def test_meta_follows_another_stores_compact(spark, tmp_path):
+    """A store whose index another store compacts scores with the new
+    N/avgdl: meta.json is re-read with the parquet handles."""
+    path = str(tmp_path / "idx")
+    a = _build(spark, path)
+    b = IndexStore(spark, path)
+    a.topk(QUERY, k=3).collect()  # a's handles, meta and plan cache are warm
+    b.delete_docs(range(20))
+    b.compact()
+    assert a.meta == b.meta
+    got = [(r["docID"], r["score"]) for r in a.topk(QUERY, k=3).collect()]
+    exp = [(r["docID"], r["score"]) for r in b.topk(QUERY, k=3).collect()]
+    assert [d for d, _ in got] == [d for d, _ in exp]
+    for (_, x), (_, y) in zip(got, exp):
+        assert abs(x - y) < 1e-9

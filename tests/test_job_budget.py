@@ -60,3 +60,18 @@ def test_warm_read_job_budget(spark, store, op):
     call(store, engine)  # warm: plan cache, parquet handles, Python workers
     jobs = count_jobs(spark, f"job-budget-{op}", lambda: call(store, engine))
     assert jobs <= budget, f"{op}: {jobs} Spark jobs, budget {budget}"
+
+
+def test_cold_plan_cache_after_compact_job_budget(spark, tmp_path):
+    """The first plan_cache() after compact() opens the rewritten segments
+    and aggregates them in one Arrow collect: at most 3 jobs."""
+    path = str(tmp_path / "idx")
+    tr = synthesize_transcripts(spark, n_convs=8, turns_per_conv=6, seed=5)
+    build_index(spark, tr, path, source_fingerprint="synth:8x6:5", postings_per_salt=50)
+    store = IndexStore(spark, path)
+    store.topk(QUERY, k=5).collect()  # warm: plan cache and handles of the old epoch
+    store.delete_docs([0, 1])
+    store.compact()
+    jobs = count_jobs(spark, "job-budget-cold-plan-cache", store.plan_cache)
+    assert store.plan_cache()["terms"]
+    assert jobs <= 3, f"cold plan_cache: {jobs} Spark jobs, budget 3"
