@@ -260,7 +260,8 @@ def merge_segments(
     max-salt of earlier runs (ordered by docID range) so (term, salt)
     groups never collide across runs; blockIDs within a group are
     untouched. Query correctness needs no global block numbering — blocks
-    carry absolute [first_docID, last_docID] zones.
+    carry absolute [first_docID, last_docID] ranges, and a term's ranges
+    stay disjoint across runs, which the pruned wand_topk's bound needs.
 
     mode='rebuild' — for overlapping runs (e.g. a head term split across
     separately-built runs over interleaved docID ranges): decode every run

@@ -92,8 +92,8 @@ class StageResult:
 
 class IndexStore:
     #: vocabulary bound above which the session plan cache is disabled — a
-    #: driver-side dict over 10⁷+ terms is the wrong trade; per-query job A
-    #: stays bounded by |query| instead (documented in plan_cache()).
+    #: driver-side dict over 10⁷+ terms is the wrong trade; wand_topk's
+    #: per-query aggregate stays bounded by |query| instead (plan_cache()).
     PLAN_CACHE_MAX_TERMS = 5_000_000
 
     def __init__(self, spark: SparkSession, path: str):
@@ -141,48 +141,32 @@ class IndexStore:
         self._sync()
         return self._meta
 
-    def plan_cache(self, zone_width: int = 1024, wide_cap: int = 64) -> dict | None:
-        """Session-cached per-term block-metadata aggregate — exactly what
-        segment_search.wand_topk's "job A" computes per query, built ONCE
-        per index epoch over ALL terms so every warm query skips the
-        metadata job (2-3 jobs → 1-2). Invalidated whenever _epoch()
-        changes (delete/compact/rebuild/append). Returns None when the
-        vocabulary exceeds PLAN_CACHE_MAX_TERMS: at 10⁸-term scale the
-        right cache is the per-query filtered aggregate (bounded by |q|),
-        not a driver dict.
+    def plan_cache(self) -> dict | None:
+        """Session-cached per-term block counts, {"epoch", "terms": {term:
+        {df, nblocks}}}, built once per index epoch over ALL terms in one
+        Arrow collect. The router costs a query from it, and
+        segment_search.wand_topk takes df and block counts from it in place
+        of a per-query aggregate job. Invalidated whenever _epoch() changes
+        (delete/compact/rebuild/append). Returns None when the vocabulary
+        exceeds PLAN_CACHE_MAX_TERMS: at 10⁸-term scale the right lookup is
+        the per-query aggregate (bounded by |q|), not a driver dict.
         """
         epoch = self._sync()
         c = self._plan_cache
-        if (
-            c is not None
-            and c["epoch"] == epoch
-            and c["zone_width"] == zone_width
-            and c["wide_cap"] == wide_cap
-        ):
+        if c is not None and c["epoch"] == epoch:
             return c if c.get("terms") is not None else None
-        zlo = (F.col("first_docID") / zone_width).cast("long")
-        zhi = (F.col("last_docID") / zone_width).cast("long")
-        wide = (zhi - zlo) >= wide_cap
         # one Arrow collect, capped one row past the bound: the cap both
         # detects an oversized vocabulary and keeps it off the driver
         agg = (
             self.segments.groupBy("term")
-            .agg(
-                F.sum("n").alias("df"),
-                F.count("*").alias("nblocks"),
-                F.count(F.when(wide, F.lit(1))).alias("nwide"),
-                F.max(F.when(wide, F.col("max_score_component"))).alias("wide_max"),
-                F.max("max_score_component").alias("tmax"),
-            )
+            .agg(F.sum("n").alias("df"), F.count("*").alias("nblocks"))
             .limit(self.PLAN_CACHE_MAX_TERMS + 1)
             .toArrow()
         )
         terms = None
         if agg.num_rows <= self.PLAN_CACHE_MAX_TERMS:
             terms = {r.pop("term"): r for r in agg.to_pylist()}
-        self._plan_cache = {
-            "epoch": epoch, "zone_width": zone_width, "wide_cap": wide_cap, "terms": terms,
-        }
+        self._plan_cache = {"epoch": epoch, "terms": terms}
         return self._plan_cache if terms is not None else None
 
     # --- open-time accessors (lazy scans; segments scan prunes by shard) --
@@ -312,16 +296,22 @@ class IndexStore:
         tombs.unpersist()
         return {"deleted": n_del, "N": n_docs, "avgdl": avgdl}
 
-    # --- auto-router cost model (calibrated against BENCH.md §4/§6) ------
+    # --- auto-router cost model ------------------------------------------
     # Fixed floors are Spark job-scheduling latency at interactive scale;
-    # the byte terms are what dominate at 100 TB. Segments decode an
-    # estimated 5 B/posting of block arrays; relational scans the postings
-    # parquet (~16 B/posting) plus a doclens join (~12 B/doc) JVM-side. Engaging the θ/zone prune machinery costs
-    # extra jobs (seed decode + zone agg) — the measured ~3 s penalty that
-    # made head-only queries lose on the segment path (§4 head1).
-    ROUTER_SEG_FIXED_S = 0.30        # 2-job early-exit floor
-    ROUTER_SEG_PRUNE_FIXED_S = 3.50  # 3-4-job prune-path floor (θ seed + zones)
-    ROUTER_REL_FIXED_S = 1.00        # scan+shuffle+agg single-job floor
+    # the byte terms are what dominate at 100 TB. The floors are the lowest
+    # per-query median wall of each path, warm, on a 10k-turn perfbench
+    # index (seed 7, queries 0-7 of make_queries(7) plus w1 and w1+w2,
+    # k=10, local[4] on a 4-core host, 3 interleaved trials; the table is
+    # in CHANGES.md). The bytes per posting are the on-disk zstd bytes of
+    # that index's `segments` and `postings` stages over its 223,819
+    # postings (at 100k turns they read 3.72 and 2.82). Postings carry
+    # `dl` inline, so the relational route reads no doclens. The
+    # throughputs are not re-measured.
+    ROUTER_SEG_FIXED_S = 0.22        # early exit, 2 jobs
+    ROUTER_SEG_PRUNE_FIXED_S = 0.43  # driver-planned prune, 4 jobs
+    ROUTER_REL_FIXED_S = 0.41        # relational scan+agg, 4 jobs
+    ROUTER_SEG_BYTES = 5.45          # segments stage, B/posting
+    ROUTER_REL_BYTES = 2.95          # postings stage, B/posting
     ROUTER_SEG_BPS = 150e6           # segment decode throughput
     ROUTER_REL_BPS = 1.5e9           # JVM codegen scan throughput
 
@@ -329,23 +319,21 @@ class IndexStore:
         self,
         terms,
         k: int = 10,
-        prune: bool = True,
         strategy: str = "auto",
         stats_out: dict | None = None,
     ) -> DataFrame:
         """Top-k BM25 over the store.
 
         strategy='auto' routes on an estimated-cost model over the session
-        plan cache (zero extra Spark jobs when the cache is warm): the
-        segment path is costed at its job floor plus an estimated 5 bytes
-        per posting of the query terms' blocks (all blocks — pruning
-        savings are not assumed), the relational path at
-        its floor plus postings-parquet plus doclens-join bytes through a
-        JVM scan. Small block sets take the segment early-exit outright
-        (measured 1.8-4.1× wins, BENCH.md §4); head-heavy queries route
-        relational. The decision (strategy, estimated bytes, block count,
-        cache hit) is recorded in `stats_out["router"]` when given.
-        'segments'/'relational' force a path."""
+        plan cache (zero extra Spark jobs when the cache is warm). A query
+        of at most 512 blocks takes the segment early exit outright. Above
+        that, the pruned segment path is costed at its job floor plus the
+        segment bytes of all the query terms' postings (pruning savings are
+        not assumed), and the relational path at its floor plus the
+        postings-stage bytes through a JVM scan (ROUTER_* constants). The
+        decision (strategy, estimated bytes, block count, cache hit) is
+        recorded in `stats_out["router"]` when given. 'segments'/
+        'relational' force a path."""
         from neural_search_spark.index.segments import BLOCK_SIZE
         from neural_search_spark.query.segment_search import wand_topk
 
@@ -385,10 +373,10 @@ class IndexStore:
                 }
                 est_blocks = sum(-(-d // BLOCK_SIZE) for d in dfs.values())
                 sum_df = sum(dfs.values())
-            decode_bytes = 5 * sum_df
-            rel_bytes = 16 * sum_df + 12 * int(self.meta["N"])
+            decode_bytes = round(self.ROUTER_SEG_BYTES * sum_df)
+            rel_bytes = round(self.ROUTER_REL_BYTES * sum_df)
             if est_blocks <= 512:
-                # early-exit decode: 2 jobs, measured 1.8-4.1× wins
+                # early-exit decode: 2 jobs
                 strategy, seg_cost = "segments", self.ROUTER_SEG_FIXED_S
                 rel_cost = self.ROUTER_REL_FIXED_S + rel_bytes / self.ROUTER_REL_BPS
             else:
@@ -421,7 +409,6 @@ class IndexStore:
             avgdl=self.meta["avgdl"],
             terms=terms,
             k=k,
-            prune=prune,
             stats_out=stats_out,
             plan_cache=plan_cache,
         )

@@ -12,6 +12,7 @@ import pytest
 
 from neural_search_spark.data import synthesize_transcripts
 from neural_search_spark.index.store import IndexStore, build_index
+from neural_search_spark.query.segment_search import wand_topk
 
 QUERY = ["the", "data", "spark"]
 
@@ -75,3 +76,26 @@ def test_cold_plan_cache_after_compact_job_budget(spark, tmp_path):
     jobs = count_jobs(spark, "job-budget-cold-plan-cache", store.plan_cache)
     assert store.plan_cache()["terms"]
     assert jobs <= 3, f"cold plan_cache: {jobs} Spark jobs, budget 3"
+
+
+@pytest.mark.parametrize("cached,budget", [(True, 4), (False, 6)], ids=["plan-cache", "no-plan-cache"])
+def test_pruned_wand_job_budget(spark, store, cached, budget):
+    """A warm pruned wand_topk plans on the driver: the metadata read, the θ
+    seed and the decode+score; without a plan cache, a per-term df
+    aggregate (one shuffle) comes first. Its stats_out holds numbers the
+    driver already has, so passing it adds no job."""
+
+    def call(stats_out=None):
+        return wand_topk(
+            store.segments, None, store.meta["N"], store.meta["avgdl"], QUERY, k=5,
+            no_prune_blocks=0, stats_out=stats_out,
+            plan_cache=store.plan_cache() if cached else None,
+        ).collect()
+
+    call()  # warm
+    jobs = count_jobs(spark, f"job-budget-wand-{cached}", call)
+    so: dict = {}
+    with_stats = count_jobs(spark, f"job-budget-wand-stats-{cached}", lambda: call(so))
+    assert jobs <= budget, f"pruned wand_topk: {jobs} Spark jobs, budget {budget}"
+    assert with_stats == jobs, f"stats_out added {with_stats - jobs} Spark jobs"
+    assert 0 < so["blocks_surviving"] <= so["blocks_total"], so

@@ -144,8 +144,11 @@ def test_merge_segments_disjoint_ranges(spark, tmp_path):
 
     docs = {r["docID"]: r["text"] for r in tr.select("docID", "text").collect()}
     exp = oracle.topk(oracle.bm25_scores(docs, ["the", "data", "spark"]), 10)
-    got = wand_topk(merged, full.term_stats, n_docs, avgdl, ["the", "data", "spark"], k=10).collect()
-    assert [r["docID"] for r in got] == [d for d, _ in exp]
+    # unpruned, then pruned: merged runs keep each term's blocks disjoint
+    for no_prune_blocks in (10**9, 0):
+        got = wand_topk(merged, full.term_stats, n_docs, avgdl, ["the", "data", "spark"], k=10,
+                        no_prune_blocks=no_prune_blocks).collect()
+        assert [r["docID"] for r in got] == [d for d, _ in exp], no_prune_blocks
 
     # overlapping runs must be rejected in append mode
     with pytest.raises(ValueError, match="overlapping"):
@@ -210,7 +213,9 @@ def test_merge_rebuild_overlapping_head_term(spark, tmp_path, python_operators):
 
     docs = {r["docID"]: r["text"] for r in tr.select("docID", "text").collect()}
     exp = oracle.topk(oracle.bm25_scores(docs, ["the", "data", "spark"]), 10)
-    got = wand_topk(merged, full.term_stats, n_docs, avgdl, ["the", "data", "spark"], k=10).collect()
-    assert [r["docID"] for r in got] == [d for d, _ in exp]
-    for r, (_, s) in zip(got, exp):
-        assert r["score"] == pytest.approx(s, rel=1e-9)
+    for no_prune_blocks in (10**9, 0):
+        got = wand_topk(merged, full.term_stats, n_docs, avgdl, ["the", "data", "spark"], k=10,
+                        no_prune_blocks=no_prune_blocks).collect()
+        assert [r["docID"] for r in got] == [d for d, _ in exp], no_prune_blocks
+        for r, (_, s) in zip(got, exp):
+            assert r["score"] == pytest.approx(s, rel=1e-9)

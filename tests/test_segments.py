@@ -55,6 +55,15 @@ def test_segment_invariants(segments, index_tables):
         if r["salt"] > 0:
             salted.add(r["term"])
     assert salted, "expected salted head terms with postings_per_salt=50"
+    # a term's blocks cover disjoint docID ranges (salts included): the
+    # pruned wand_topk bounds each docID interval by the one block of each
+    # term that covers it
+    by_term: dict = {}
+    for r in rows:
+        by_term.setdefault(r["term"], []).append((r["first_docID"], r["last_docID"]))
+    for t, spans in by_term.items():
+        spans.sort()
+        assert all(a[1] < b[0] for a, b in zip(spans, spans[1:])), t
     # postings conservation: total decoded postings == postings rows
     total = sum(r["n"] for r in rows)
     assert total == index_tables.postings.count()
@@ -76,7 +85,8 @@ def test_wand_topk_matches_relational_and_oracle(
     docs = {r["docID"]: r["text"] for r in transcripts.select("docID", "text").collect()}
     exp = oracle.topk(oracle.bm25_scores(docs, terms), 10)
 
-    for prune in (False, True):
+    # an unreachable threshold decodes every block; 0 plans the pruned decode
+    for no_prune_blocks in (10**9, 0):
         got = wand_topk(
             segments,
             index_tables.term_stats,
@@ -84,9 +94,9 @@ def test_wand_topk_matches_relational_and_oracle(
             avgdl=float(m["avgdl"]),
             terms=terms,
             k=10,
-            prune=prune,
+            no_prune_blocks=no_prune_blocks,
         ).collect()
-        assert [r["docID"] for r in got] == [d for d, _ in exp], f"prune={prune}"
+        assert [r["docID"] for r in got] == [d for d, _ in exp], no_prune_blocks
         for r, (_, s) in zip(got, exp):
             assert r["score"] == pytest.approx(s, rel=1e-9)
 
@@ -148,23 +158,20 @@ def test_store_build_and_resume(spark, tmp_path):
 
 
 def test_wand_pruning_actually_prunes(spark, transcripts, index_tables, segments):
-    """On the Zipf-skewed corpus, a head-term query with small k must skip a
-    substantial share of blocks, stay exact, and rescue only what the
-    zone-maps require."""
+    """On the Zipf-skewed corpus, a head-term query with small k must skip
+    blocks and stay exact."""
     m = index_tables.meta.first()
     docs = {r["docID"]: r["text"] for r in transcripts.select("docID", "text").collect()}
     # single-term, k=1: θ equals the best score, so only blocks whose
     # max-score bound reaches it survive — the sharpest pruning case
     terms = ["the"]
     stats: dict = {}
-    # small zone_width so the 200-doc fixture spans multiple zones (the
-    # default 1024 is sized for corpus-scale head-term block spans)
-    # no_prune_blocks=0 forces the zone machinery even on this tiny fixture
+    # no_prune_blocks=0 plans the pruned decode even on this tiny fixture
     # (the production default skips pruning below 512 blocks — cheaper to
     # decode than to plan)
     got = wand_topk(
         segments, index_tables.term_stats, int(m["N"]), float(m["avgdl"]),
-        terms, k=1, zone_width=32, no_prune_blocks=0, stats_out=stats,
+        terms, k=1, no_prune_blocks=0, stats_out=stats,
     ).collect()
     exp = oracle.topk(oracle.bm25_scores(docs, terms), 1)
     assert [r["docID"] for r in got] == [d for d, _ in exp]
@@ -219,7 +226,7 @@ def test_store_topk_auto_strategy(spark, tmp_path, python_operators):
         store.topk(["the"], strategy="bogus")
 
     # session plan cache: built once, reused (identity), router telemetry
-    # recorded, wand's job A skipped on the warm path
+    # recorded, wand's df aggregate skipped on the warm path
     c1 = store.plan_cache()
     c2 = store.plan_cache()
     assert c1 is c2 and c1["terms"], "cache must be reused within an epoch"
@@ -227,7 +234,7 @@ def test_store_topk_auto_strategy(spark, tmp_path, python_operators):
     got = store.topk(["tok5"], k=5, strategy="auto", stats_out=so).collect()
     assert so["router"]["plan_cache_hit"] is True
     assert so["router"]["strategy"] == "segments"  # rare term → early-exit
-    assert so.get("plan_cache_hit") is True  # wand skipped job A
+    assert so.get("plan_cache_hit") is True  # wand skipped its df aggregate
     assert [(r["docID"], round(r["score"], 9)) for r in got] == rows_ref(store, ["tok5"])
 
     from neural_search_spark.query.segment_search import wand_topk as _wand
@@ -235,7 +242,7 @@ def test_store_topk_auto_strategy(spark, tmp_path, python_operators):
     assert python_operators(lambda: store.topk(["tok5"], k=5).collect()) == set()
     assert python_operators(lambda: _wand(
         store.segments, store.term_stats, store.meta["N"], store.meta["avgdl"],
-        {"the": 1.0, "a": 1.0, "tok5": 8.0}, k=5, zone_width=32, no_prune_blocks=0,
+        {"the": 1.0, "a": 1.0, "tok5": 8.0}, k=5, no_prune_blocks=0,
     ).collect()) == set()
 
     # invalidation: a delete changes the epoch → cache rebuilt
@@ -250,36 +257,83 @@ def rows_ref(store, terms):
     return [(r["docID"], round(r["score"], 9)) for r in got]
 
 
-def test_wand_maxscore_split_kernel_and_semijoin(spark, transcripts, index_tables, segments):
-    """A query mixing dense head terms with an upweighted rare term must
-    activate the MAXSCORE essential/non-essential split (the heads' summed
-    upper bounds fall below θ), and its semi-join candidate filter must stay
-    rank- and score-identical to both the unpruned decode and the
-    brute-force oracle, decoding only zone-pruned non-essential blocks."""
+def _block_spans(segments, term):
+    return [(r["first_docID"], r["last_docID"]) for r in segments.where(F.col("term") == term)
+            .select("first_docID", "last_docID").collect()]
+
+
+def _docids(segments, term):
+    return {d for r in segments.where(F.col("term") == term).select("docids").collect()
+            for d in r["docids"]}
+
+
+def test_wand_prunes_head_only_intervals(spark, transcripts, index_tables, segments):
+    """A query mixing dense head terms with an upweighted rare term: θ rises
+    above what the heads alone can score, so every docID interval that only
+    head blocks cover is pruned (MAXSCORE's essential-term split, subsumed
+    by the interval bound). A head block is decoded only if its docID range
+    holds a rare-term posting, and the answer stays rank- and
+    score-identical to the unpruned decode and the brute-force oracle."""
     m = index_tables.meta.first()
     docs = {r["docID"]: r["text"] for r in transcripts.select("docID", "text").collect()}
-    # heavy weight on the rare term drives θ far above the heads' UBs
-    terms = {"the": 1.0, "a": 1.0, "tok5": 8.0}
+    # heavy weight on a rare term held by at least k docs drives θ far above
+    # the heads' bounds
+    terms = {"the": 1.0, "a": 1.0, "span": 8.0}
+    rare = _docids(segments, "span")
+    assert len(rare) >= 5, "fixture: the rare term must seed θ on its own"
     exp = oracle.topk(oracle.bm25_scores(docs, terms), 5)
 
     stats: dict = {}
     got = wand_topk(
         segments, index_tables.term_stats, int(m["N"]), float(m["avgdl"]),
-        terms, k=5, zone_width=32, no_prune_blocks=0, stats_out=stats,
+        terms, k=5, no_prune_blocks=0, stats_out=stats,
     ).collect()
-    assert stats["nonessential_terms"], f"split did not activate: {stats}"
-    assert "tok5" in stats["essential_terms"], stats
     assert [r["docID"] for r in got] == [d for d, _ in exp]
     for r, (_, s) in zip(got, exp):
         assert r["score"] == pytest.approx(s, rel=1e-9)
-    assert 0 <= stats["blocks_ne_decoded"] <= stats["blocks_total"] - stats["blocks_essential"]
+
+    head = _block_spans(segments, "the") + _block_spans(segments, "a")
+    with_rare = sum(any(lo <= d <= hi for d in rare) for lo, hi in head)
+    assert with_rare < len(head), "fixture: every head block holds a rare-term doc"
+    assert stats["blocks_surviving"] <= len(_block_spans(segments, "span")) + with_rare, stats
+    assert stats["theta"] > 0
 
     unpruned = wand_topk(
         segments, index_tables.term_stats, int(m["N"]), float(m["avgdl"]),
-        terms, k=5, prune=False,
+        terms, k=5, no_prune_blocks=10**9,
     ).collect()
     assert [(r["docID"], round(r["score"], 9)) for r in got] == [
         (r["docID"], round(r["score"], 9)) for r in unpruned
+    ]
+
+
+def test_wand_rare_term_bound_prunes(spark, transcripts, index_tables, segments):
+    """Head+rare query: the rare term's one block spans most of the docID
+    space, so with block bounds alone every block of this query survives.
+    Decoded whole in the θ seed, the rare term adds its exact part only at
+    the docs that hold it, so head blocks far from those docs are pruned,
+    and the answer stays rank- and score-identical to the oracle and the
+    unpruned decode."""
+    m = index_tables.meta.first()
+    docs = {r["docID"]: r["text"] for r in transcripts.select("docID", "text").collect()}
+    terms = ["token", "page"]
+    assert len(_block_spans(segments, "page")) == 1 and len(_block_spans(segments, "token")) > 1
+    exp = oracle.topk(oracle.bm25_scores(docs, terms), 10)
+
+    stats: dict = {}
+    got = wand_topk(
+        segments, None, int(m["N"]), float(m["avgdl"]), terms, k=10,
+        no_prune_blocks=0, stats_out=stats,
+    ).collect()
+    assert stats["blocks_surviving"] < stats["blocks_total"], stats
+    assert [r["docID"] for r in got] == [d for d, _ in exp]
+    for r, (_, s) in zip(got, exp):
+        assert r["score"] == pytest.approx(s, rel=1e-9)
+    unpruned = wand_topk(
+        segments, None, int(m["N"]), float(m["avgdl"]), terms, k=10, no_prune_blocks=10**9,
+    ).collect()
+    assert [(r["docID"], r["score"]) for r in got] == [
+        (r["docID"], pytest.approx(r["score"], rel=1e-9)) for r in unpruned
     ]
 
 
@@ -293,8 +347,8 @@ from hypothesis import strategies as st
 )
 def test_wand_randomized_rank_identity(spark, index_tables, segments, data):
     """Property: for random query-term subsets, weights and k, the pruned
-    block-max path (zone machinery forced, MAXSCORE split free to activate
-    or not) is rank- and score-identical to the relational join-agg.
+    block-max path (forced with no_prune_blocks=0) is rank- and
+    score-identical to the relational join-agg.
     Derandomized so the driver's pytest run is reproducible."""
     from neural_search_spark.data.transcripts import VOCAB
 
@@ -316,7 +370,7 @@ def test_wand_randomized_rank_identity(spark, index_tables, segments, data):
     ).collect()
     got = wand_topk(
         segments, index_tables.term_stats, int(m["N"]), float(m["avgdl"]),
-        terms, k=k, zone_width=32, no_prune_blocks=0,
+        terms, k=k, no_prune_blocks=0,
     ).collect()
     assert [r["docID"] for r in got] == [r["docID"] for r in rel], terms
     for g, r in zip(got, rel):

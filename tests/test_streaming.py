@@ -90,7 +90,7 @@ def test_streaming_replay_idempotent(spark, streamed):
 
 def test_streaming_compact_and_wand(spark, streamed):
     """Compaction rebuilds one segment table under global avgdl; WAND over
-    it is rank-identical to the oracle."""
+    it, pruned and unpruned, is rank-identical to the oracle."""
     from neural_search_spark.query.segment_search import wand_topk
 
     indexer, _ = streamed
@@ -100,10 +100,12 @@ def test_streaming_compact_and_wand(spark, streamed):
     docs = {r["docID"]: r["text"] for r in indexer.docs().select("docID", "text").collect()}
     terms = ["the", "data"]
     exp = oracle.topk(oracle.bm25_scores(docs, terms), 10)
-    got = wand_topk(
-        merged, t.term_stats, int(m["N"]), float(m["avgdl"]), terms, k=10, zone_width=32
-    ).collect()
-    assert [r["docID"] for r in got] == [d for d, _ in exp]
+    for no_prune_blocks in (10**9, 0):
+        got = wand_topk(
+            merged, t.term_stats, int(m["N"]), float(m["avgdl"]), terms, k=10,
+            no_prune_blocks=no_prune_blocks,
+        ).collect()
+        assert [r["docID"] for r in got] == [d for d, _ in exp], no_prune_blocks
 
 
 def test_streaming_percolate_matches_batch(spark, tmp_path_factory):

@@ -78,7 +78,7 @@ spark = get_spark("latency-q", master="local[%d]" % cpus, shuffle_partitions=cpu
 spark.sparkContext.setLogLevel("ERROR")
 store = IndexStore(spark, idx)
 
-store.plan_cache()  # session block-metadata cache: warm queries skip job A
+store.plan_cache()  # session per-term block counts: warm queries skip the df aggregate
 
 PATHS = ("relational", "segments", "auto")
 router_pick = {{}}
