@@ -144,12 +144,12 @@ class IndexStore:
     def plan_cache(self) -> dict | None:
         """Session-cached per-term block counts, {"epoch", "terms": {term:
         {df, nblocks}}}, built once per index epoch over ALL terms in one
-        Arrow collect. The router costs a query from it, and
-        segment_search.wand_topk takes df and block counts from it in place
-        of a per-query aggregate job. Invalidated whenever _epoch() changes
-        (delete/compact/rebuild/append). Returns None when the vocabulary
-        exceeds PLAN_CACHE_MAX_TERMS: at 10⁸-term scale the right lookup is
-        the per-query aggregate (bounded by |q|), not a driver dict.
+        Arrow collect. segment_search.wand_topk takes df and block counts
+        from it in place of a per-query aggregate job. Invalidated whenever
+        _epoch() changes (delete/compact/rebuild/append). Returns None when
+        the vocabulary exceeds PLAN_CACHE_MAX_TERMS: at 10⁸-term scale the
+        right lookup is the per-query aggregate (bounded by |q|), not a
+        driver dict.
         """
         epoch = self._sync()
         c = self._plan_cache
@@ -296,25 +296,6 @@ class IndexStore:
         tombs.unpersist()
         return {"deleted": n_del, "N": n_docs, "avgdl": avgdl}
 
-    # --- auto-router cost model ------------------------------------------
-    # Fixed floors are Spark job-scheduling latency at interactive scale;
-    # the byte terms are what dominate at 100 TB. The floors are the lowest
-    # per-query median wall of each path, warm, on a 10k-turn perfbench
-    # index (seed 7, queries 0-7 of make_queries(7) plus w1 and w1+w2,
-    # k=10, local[4] on a 4-core host, 3 interleaved trials; the table is
-    # in CHANGES.md). The bytes per posting are the on-disk zstd bytes of
-    # that index's `segments` and `postings` stages over its 223,819
-    # postings (at 100k turns they read 3.72 and 2.82). Postings carry
-    # `dl` inline, so the relational route reads no doclens. The
-    # throughputs are not re-measured.
-    ROUTER_SEG_FIXED_S = 0.22        # early exit, 2 jobs
-    ROUTER_SEG_PRUNE_FIXED_S = 0.43  # driver-planned prune, 4 jobs
-    ROUTER_REL_FIXED_S = 0.41        # relational scan+agg, 4 jobs
-    ROUTER_SEG_BYTES = 5.45          # segments stage, B/posting
-    ROUTER_REL_BYTES = 2.95          # postings stage, B/posting
-    ROUTER_SEG_BPS = 150e6           # segment decode throughput
-    ROUTER_REL_BPS = 1.5e9           # JVM codegen scan throughput
-
     def topk(
         self,
         terms,
@@ -324,17 +305,13 @@ class IndexStore:
     ) -> DataFrame:
         """Top-k BM25 over the store.
 
-        strategy='auto' routes on an estimated-cost model over the session
-        plan cache (zero extra Spark jobs when the cache is warm). A query
-        of at most 512 blocks takes the segment early exit outright. Above
-        that, the pruned segment path is costed at its job floor plus the
-        segment bytes of all the query terms' postings (pruning savings are
-        not assumed), and the relational path at its floor plus the
-        postings-stage bytes through a JVM scan (ROUTER_* constants). The
-        decision (strategy, estimated bytes, block count, cache hit) is
-        recorded in `stats_out["router"]` when given. 'segments'/
-        'relational' force a path."""
-        from neural_search_spark.index.segments import BLOCK_SIZE
+        strategy='auto' takes the segment path, wand_topk with the session
+        plan cache: its own block threshold (no_prune_blocks) picks the
+        early exit or the driver-planned prune, and the cache spares it the
+        per-query block count. With tombstones present every strategy takes
+        the relational path (below). The decision (strategy, plan-cache
+        hit) is recorded in `stats_out["router"]` when given.
+        'segments'/'relational' force a path."""
         from neural_search_spark.query.segment_search import wand_topk
 
         if strategy not in ("auto", "segments", "relational"):
@@ -354,54 +331,15 @@ class IndexStore:
                 exclude=tombs,
             )
             return _topk(scored, k)
-        plan_cache = None
-        if strategy in ("auto", "segments"):
-            plan_cache = self.plan_cache()
-        if strategy == "auto":
-            q_terms = sorted(set(terms))
-            if plan_cache is not None:
-                ct = plan_cache["terms"]
-                present = [t for t in q_terms if t in ct]
-                est_blocks = sum(ct[t]["nblocks"] for t in present)
-                sum_df = sum(ct[t]["df"] for t in present)
-            else:
-                # vocabulary too large for a driver cache: one bounded
-                # lookup job on the query terms only
-                dfs = {
-                    r["term"]: int(r["df"])
-                    for r in self.term_stats.where(F.col("term").isin(q_terms)).collect()
-                }
-                est_blocks = sum(-(-d // BLOCK_SIZE) for d in dfs.values())
-                sum_df = sum(dfs.values())
-            decode_bytes = round(self.ROUTER_SEG_BYTES * sum_df)
-            rel_bytes = round(self.ROUTER_REL_BYTES * sum_df)
-            if est_blocks <= 512:
-                # early-exit decode: 2 jobs
-                strategy, seg_cost = "segments", self.ROUTER_SEG_FIXED_S
-                rel_cost = self.ROUTER_REL_FIXED_S + rel_bytes / self.ROUTER_REL_BPS
-            else:
-                seg_cost = (
-                    self.ROUTER_SEG_PRUNE_FIXED_S
-                    + decode_bytes / self.ROUTER_SEG_BPS
-                )
-                rel_cost = self.ROUTER_REL_FIXED_S + rel_bytes / self.ROUTER_REL_BPS
-                strategy = "segments" if seg_cost < rel_cost else "relational"
-            if stats_out is not None:
-                stats_out["router"] = {
-                    "strategy": strategy,
-                    "est_blocks": est_blocks,
-                    "decode_bytes": decode_bytes,
-                    "rel_bytes": rel_bytes,
-                    "seg_cost_s": round(seg_cost, 3),
-                    "rel_cost_s": round(rel_cost, 3),
-                    "plan_cache_hit": plan_cache is not None,
-                }
         if strategy == "relational":
             from neural_search_spark.query.bm25 import bm25_topk
 
             return bm25_topk(
                 self.postings, self.doclens, self.term_stats, self._meta_frame(), terms, k=k
             )
+        plan_cache = self.plan_cache()
+        if strategy == "auto" and stats_out is not None:
+            stats_out["router"] = {"strategy": "segments", "plan_cache_hit": plan_cache is not None}
         return wand_topk(
             self.segments,
             None,  # never scanned: opening it would cost a schema job

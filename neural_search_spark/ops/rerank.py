@@ -3,9 +3,7 @@
 field, keep the previous score; processor/rerank/RerankProcessor interface).
 
 The ML cross-encoder reranker (MLOpenSearchRerankProcessor) needs a model
-RPC that does not exist in this sandbox; `rerank_by_scores` provides the
-same dataflow with caller-supplied scores (e.g. from any scoring DataFrame),
-which is what the processor does once inference returns.
+RPC, which this package does not provide.
 """
 
 from __future__ import annotations
@@ -42,18 +40,3 @@ def rerank_by_field(
         cols.append(F.col("score").alias("previous_score"))
     return out.select(*cols).orderBy("rank")
 
-
-def rerank_by_scores(
-    results: DataFrame,
-    new_scores: DataFrame,
-    id_col: str = "docID",
-    score_col: str = "new_score",
-) -> DataFrame:
-    """Replace result scores with externally computed ones (the dataflow of
-    an ML reranker after inference); docs missing a new score are dropped,
-    matching the processor's behavior of only keeping rescored hits."""
-    joined = results.join(new_scores.select(F.col(id_col).alias("docID"), F.col(score_col)), "docID")
-    w = Window.orderBy(F.col(score_col).desc(), F.col("docID").asc())
-    return joined.withColumn("rank", F.row_number().over(w)).select(
-        "rank", "docID", F.col(score_col).alias("score")
-    )

@@ -26,9 +26,9 @@ aggregation — no join per clause, no second scan. Clause count ≤ 63
 weights of a term shared by several scoring clauses sum, which matches
 Lucene because idf·tf-norm factors out: Σ_c w_c·idf·tfn = (Σ_c w_c)·idf·tfn.
 
-``QueryEngine._score`` bool branch (dsl.py) routes all-lexical bools here
-and composes everything else (neural/phrase/multiterm clauses) with the
-generic per-clause join plan.
+``QueryEngine._bool`` (dsl.py's bool handler in QUERY_KINDS) routes
+all-lexical bools here and composes everything else (neural/phrase/
+multiterm clauses) with the generic per-clause join plan.
 
 The fused path has the same plan as a plain BM25 query (one exchange on
 docID) regardless of clause count.

@@ -75,11 +75,6 @@ class ModelRegistry:
     def encode_sparse(self, model_id: str, text: str) -> dict[str, float]:
         return {str(t): float(w) for t, w in self._get(model_id, "sparse")(text).items()}
 
-    def encode_multimodal(
-        self, model_id: str, text: str | None, image: bytes | None
-    ) -> list[float]:
-        return [float(x) for x in self._get(model_id, "multimodal")(text, image)]
-
 
 def hash_dense_encoder(dim: int = 8) -> Callable[[str], list[float]]:
     """Deterministic text → unit vector: each token hashes (md5) to a signed

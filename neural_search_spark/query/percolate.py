@@ -60,7 +60,7 @@ def percolate(
 
     `broadcast_rules`: the registered rule table rides a broadcast by
     default (a million 4-term rules is tens of MB of strings — fine for
-    the executor broadcast budget; measured in tools/percolate_bench.py).
+    the executor broadcast budget; measured at 2 M docs, BENCH.md §9).
     Pass False when the rule-term table outgrows the broadcast budget
     (10⁸+ rule terms): the join becomes a shuffle hash join on `term` —
     one extra exchange of the (small relative to the corpus) rule table,

@@ -10,19 +10,12 @@ import random
 import pytest
 
 from neural_search_spark.index.build import build_index_tables
-from neural_search_spark.query.dsl import QueryEngine, QueryValidationError
+from neural_search_spark.query.dsl import QUERY_KINDS, QueryEngine, QueryValidationError
 
 DOCS = [(i, f"alpha beta gamma tok{i}") for i in range(8)]
 
-KINDS = [
-    "match", "match_phrase", "term", "prefix", "wildcard", "fuzzy",
-    "neural_sparse", "neural", "hybrid", "bool", "ids", "exists",
-    "match_all", "match_none", "synonym", "more_like_this", "span_near",
-    "function_score", "range", "terms", "nonsense_kind",
-    # third-wave kinds
-    "dis_max", "boosting", "constant_score", "regexp", "terms_set",
-    "match_phrase_prefix", "rank_feature", "simple_query_string",
-]
+# every kind the dispatch table knows, plus one it does not
+KINDS = sorted(QUERY_KINDS) + ["nonsense_kind"]
 VALUES = [None, 1, "alpha", [], {}, [1, 2], {"query": "alpha"},
           {"value": "alpha"}, {"field": "text"}, {"terms": ["alpha"]},
           {"like": [0]}, {"groups": [["alpha"]]}, {"queries": []},
@@ -93,3 +86,20 @@ def test_top_hits_score_decimals_validated(fuzz_engine):
     aggs = {"t": {"top_hits": {"group_by": "text", "score_decimals": 2}}}
     _, out = fuzz_engine.search_with_aggs(q, aggs)
     assert out["t"].count() == 8
+
+
+def test_malformed_aggregations_raise_validation(fuzz_engine):
+    """A malformed aggregation spec is a parse error at the aggregation
+    table's lookup, like a malformed query: never a raw ValueError,
+    AttributeError or Spark AnalysisException."""
+    q = {"match": {"text": "alpha"}}
+    for aggs in (
+        {"x": {"terms": {"field": "lang"}, "avg": {"field": "docID"}}},  # two kinds
+        {"x": {"terms": "lang"}},  # body not an object
+        {"x": "terms"},  # spec not an object
+        ["terms"],  # aggs not an object
+        {"x": {"terms": {"field": "nope"}}},  # no such docs column
+        {"x": {"histogram": {"field": "docID", "interval": "wide"}}},  # not a number
+    ):
+        with pytest.raises(QueryValidationError):
+            fuzz_engine.search_with_aggs(q, aggs)

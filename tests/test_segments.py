@@ -202,10 +202,10 @@ def test_xxhash64_py_matches_spark(spark):
 
 
 def test_store_topk_auto_strategy(spark, tmp_path, python_operators):
-    """strategy='auto' must return the same ranking as both forced paths,
-    and pick the segment path for rare terms / relational for head terms.
-    The segment reads, early exit and pruned alike, run no Python
-    operator."""
+    """strategy='auto' must return the same ranking as both forced paths
+    and take the segment path, which picks the early exit or the pruned
+    decode by its block count. The segment reads, early exit and pruned
+    alike, run no Python operator."""
     from neural_search_spark.data import synthesize_transcripts
     from neural_search_spark.index.store import IndexStore, build_index
 

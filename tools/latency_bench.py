@@ -12,7 +12,7 @@ per query:
 
 and asserts rank identity between them per query. Reports per-path
 p50/p95 latency and q/s (sequential, 1 in-flight query — the per-query
-latency number; batch throughput is tools/batch_query_bench.py's job).
+latency number; batch throughput is perfbench's msearch op).
 
 Usage: python tools/latency_bench.py [--turns 2000000] [--n 8] [--nq 24]
 """
@@ -29,8 +29,8 @@ import sys
 def make_queries(nq: int, vocab_size: int) -> dict[int, list[str]]:
     """Deterministic mixed-selectivity query set over the Zipf vocabulary
     (w1 is the most frequent term): head+mid pairs, mid triples, rare
-    singletons, head+mid+rare triples — the same mix batch_query_bench
-    uses, as term lists."""
+    singletons, head+mid+rare triples — the mix perfbench/gen.py
+    make_queries draws from a seed, as term lists."""
     V = vocab_size
     qdefs: dict[int, list[str]] = {}
     for i in range(nq):
